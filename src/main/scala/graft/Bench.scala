@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Steady-state benchmark over every catalog query.
   *
@@ -18,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   * Artifacts:
   *   - stdout: ONE JSON line {"metric","value","unit","queries","sf"} —
   *     the driver contract, unchanged;
-  *   - `SPARK_GRAFT_BENCH_OUT` (default BENCH_FULL.json in the cwd): the
+  *   - `SPARK_GRAFT_BENCH_OUT` (default BENCH_FULL_<n>c.json in the cwd): the
   *     COMPLETE per-query result — all reps, the per-query coefficient
   *     of variation over those reps (queries with cv > 0.35 are listed
   *     under `high_variance`: mechanically computed shared-box noise,
@@ -34,43 +33,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     // full artifacts are named by core count so a low-core scaling run
     // minutes later cannot overwrite the main run's per-query record
     // (r13 lost its 32-core full artifact exactly that way)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"BENCH_FULL_${cpus}c.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the engine's TypedImperativeAggregates (TopKNbr, sketches) are
-      // built for LARGE group counts with small bounded buffers; Spark's
-      // default 128-group ObjectHashAggregate fallback flips their
-      // map-side combine to sort-based (serialize + sort every buffer) —
-      // measured ~20% slower on the pair-aggregation family (q52/q148/
-      // q141). 4096 groups × O(k)-sized buffers is a few MB per task.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "4096"))
-      // scale checkpoints override: group counts and row-group fan-out
-      // must track the corpus (see Verify.scala for the rationale)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))
-      // shuffle FILES are only reclaimed when the driver GC collects the
-      // shuffle dependencies — a multi-hour many-query session on a big
-      // heap barely GCs, so spills accumulate across queries and can
-      // fill local disk (the sf10 checkpoint died exactly this way: 41
-      // heavy queries x 3 passes outran Spark's built-in 30min periodic
-      // GC). On a cluster the external shuffle service + dynamic
-      // allocation bound this; in local mode the knob is the periodic GC
-      // interval, so the fallback here must be TIGHTER than the built-in
-      // default or the config is a no-op — 5min bounds spill retention
-      // to a few queries' worth on long sessions.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "5min"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
 
     // dev-only: extra args restrict the run to the named queries (the
     // driver always invokes with no args → full catalog)

@@ -1,13 +1,16 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
-/** Dev-only per-query profiler: runs each named query like [[BenchOne]]
-  * but attaches a listener that attributes wall time to Spark jobs —
-  * job count, stage count, task count, summed task wall, and the top
-  * stages by duration — so "is this query job-overhead-bound or
-  * compute-bound?" is a measurement, not a guess. Not part of the
-  * driver contract.
+/** Dev-only per-query probe: runs each named query twice, cold (rep 1)
+  * then warm (rep 2), on the [[Session]] the bench uses. Per rep it
+  * prints wall time, rows, and a listener's attribution of that time to
+  * Spark jobs — job count, stage count, task count, summed task wall,
+  * and the top stages by duration — so "is this query
+  * job-overhead-bound or compute-bound?" is a measurement, not a guess.
+  * After both reps it lists the largest cached RDDs by memory. Not part
+  * of the driver contract.
+  *
+  * Usage: SPARK_GRAFT_SF_DIR=<sfDir> runMain graft.ProfileOne <query>...
   */
 object ProfileOne {
   final class L extends SparkListener {
@@ -40,33 +43,26 @@ object ProfileOne {
     }
   }
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "4096"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))
-      .config("spark.ui.enabled", "false")
-      // dev lever: SPARK_GRAFT_PROFILE_CONF="k1=v1;k2=v2" for A/B conf runs
-      .config(sys.env.get("SPARK_GRAFT_PROFILE_CONF").toSeq
-        .flatMap(_.split(";")).map(_.split("=", 2))
-        .collect { case Array(k, v) => k -> v }.toMap)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     val l = new L
     spark.sparkContext.addSparkListener(l)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     for (n <- args) {
-      for (rep <- 1 to 2) {
+      for (pass <- Seq("cold", "warm")) {
         l.reset()
         val t0 = System.nanoTime()
         val c = SparkEntry.queries(n)(spark, d).count()
         val dt = (System.nanoTime() - t0) / 1e9
         Thread.sleep(300) // let the listener bus drain
-        if (rep == 2) {
-          println(f"== $n rep$rep: $dt%.2f s ($c rows)  ${l.report()}")
-        }
+        println(f"== $n $pass: $dt%.2f s ($c rows)  ${l.report()}")
+      }
+      // what the query left cached: attributes a storage-budget
+      // regression (the Bench gate) to its memo
+      val infos = spark.sparkContext.getRDDStorageInfo
+        .filter(_.memSize > 0).sortBy(-_.memSize)
+      println(s"== $n resident: total ${infos.map(_.memSize).sum / 1048576} MiB")
+      infos.take(8).foreach { i =>
+        println(f"   ${i.memSize / 1048576.0}%8.1f MiB  ${i.name.linesIterator.next()}")
       }
     }
     spark.stop()

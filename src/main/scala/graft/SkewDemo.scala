@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.operators.SkewLab
 
 /** Measured skew-join artifact (VERDICT-r8 #6): run the [[SkewLab]]
@@ -19,14 +18,7 @@ object SkewDemo {
     val advisory = if (args.length > 2) args(2) else "1MB"
     // salt ≫ shuffle partitions so the hot key's sub-keys spread evenly
     val salt = if (args.length > 3) args(3).toInt else 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     val diag = SkewLab.diagnose(spark, sfDir).collect()
     val runs = Seq(

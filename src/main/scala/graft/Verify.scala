@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,30 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // dev-only: extra args select a subset of queries to dump
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Bench.scala: keep large-group object aggregates hash-based.
-      // Both knobs scale with the corpus (env-overridable for scale
-      // checkpoints): group counts grow with data, so a fixed fallback
-      // threshold silently flips the pair-aggregation family to
-      // sort-based at 100x; and split size must let row groups of the
-      // checkpoint corpus fan out across cores.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "4096"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))
-      // see Bench.scala: bound cross-query shuffle-file retention on
-      // long sessions (big-SF full-catalog dumps spill tens of GB).
-      // 5min, not 30min — 30min IS Spark's default, so it wouldn't fix
-      // the spill accumulation it's here to fix.
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "5min"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     new java.io.File(outDir).mkdirs()
     // a query that fails before dumping must leave an explicit artifact —
     // the r7 round shipped with 18 broken queries silently ABSENT from

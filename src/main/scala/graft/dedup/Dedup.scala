@@ -166,13 +166,12 @@ object Dedup {
   private[graft] val WideBandGateDocs: Long = 100000L
 
   /** Corpus-size gate for the EXACT prefix AND-amplification (q204/q217)
-    * — sys-prop overridable so the forced-gate equality specs can drive
-    * the big-corpus path on the sf0.001 fixture.
+    * — overridable only through the `graft.pf.gate.docs` system property,
+    * which the forced-gate equality specs set to drive the big-corpus path
+    * on the sf0.001 fixture.
     */
   private[graft] def pfGateDocs: Long =
-    sys.props.get("graft.pf.gate.docs")
-      .orElse(sys.env.get("SPARK_GRAFT_PF_GATE_DOCS"))
-      .map(_.toLong).getOrElse(WideBandGateDocs)
+    sys.props.get("graft.pf.gate.docs").map(_.toLong).getOrElse(WideBandGateDocs)
 
   /** Extension width `s` for the exact prefix AND-amplification gate.
     *

@@ -13,6 +13,5 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens=java.base/$p=ALL-UNNAMED"
 done
-exec java $OPENS -Xmx"$MEM" -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
+exec java $OPENS -Xmx"$MEM" \
   -cp "${GRAFT_CLASSES:-/root/repo/target/scala-2.13/classes}:/opt/spark/jars/*" "$@"
