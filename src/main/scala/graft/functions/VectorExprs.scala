@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -111,6 +112,11 @@ object VectorExprs {
     */
   def encodeSortedGrams(a: Column, vocab: Array[String]): Column =
     toColumn(EncodeSortedGrams(ex(a), vocab))
+
+  /** The row's L2-normalized copy as `array<double>` — see
+    * [[L2Normalize]].
+    */
+  def l2Normalize(v: Column): Column = toColumn(L2Normalize(ex(v)))
 
   /** Per-cell spherical IVF scores as one array — see [[CellScores]]. */
   def cellScores(emb: Column, cents: Array[Array[Double]],
@@ -219,6 +225,72 @@ private object CellNumerics {
 
   def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
+}
+
+/** x / ‖x‖ over a numeric array, as `array<double>` — the quantizer
+  * family's spherical normalization (coarse fit, PQ fit, probe queries).
+  * The SQL form, `transform(x, e => e / sqrt(aggregate(x, 0d, (a, e) =>
+  * a + e * e)))` over the `array<double>` cast, runs interpreted with a
+  * lambda call and a boxed value per element; this is one fused loop
+  * per row, in whole-stage codegen through the referenced [[compute]]
+  * (a pass over the cached sf0.1 corpus, 2000×64 on 4 cores: ~650 ms
+  * for the SQL form, ~150 ms here, ~140 ms for the bare cast).
+  *
+  * Bit-identical to the SQL form: float elements widen to double
+  * before squaring (the cast comes first there), the norm is
+  * [[CellNumerics.nrm]]'s left-to-right sum of squares, each element is
+  * one IEEE division. The edge cases follow the lambda's SQL semantics:
+  * a null element makes the norm null, so every element comes out null;
+  * a zero norm over a non-empty row divides by zero, which is null per
+  * element without ANSI and raises DIVIDE_BY_ZERO under it
+  * (`failOnError`, read from the session's ANSI setting when the
+  * expression is built, as `Divide` reads it).
+  */
+case class L2Normalize(child: Expression,
+    failOnError: Boolean = SQLConf.get.ansiEnabled)
+    extends UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+
+  /** float/double arrays pass through; anything else casts to
+    * array<double>.
+    */
+  override def inputTypes: Seq[DataType] = Seq(child.dataType match {
+    case t @ ArrayType(FloatType | DoubleType, _) => t
+    case _ => ArrayType(DoubleType)
+  })
+
+  @transient private lazy val float = CellNumerics.isFloat(child)
+
+  def compute(a: ArrayData): ArrayData = {
+    val n = a.numElements()
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) return new GenericArrayData(new Array[Any](n))
+      i += 1
+    }
+    val nrm = CellNumerics.nrm(a, float)
+    if (nrm == 0.0 && n > 0) {
+      if (failOnError) throw GraftBridge.divideByZeroError()
+      return new GenericArrayData(new Array[Any](n))
+    }
+    val out = new Array[Double](n)
+    i = 0
+    while (i < n) {
+      out(i) = (if (float) a.getFloat(i).toDouble else a.getDouble(i)) / nrm
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    compute(input.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("l2Normalize", this, classOf[L2Normalize].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
+  }
+  override protected def withNewChildInternal(newChild: Expression): L2Normalize =
+    copy(child = newChild)
 }
 
 /** Per-cell spherical IVF scores s_c = (dot(x,c)·2)/‖x‖ − |c|² (or

@@ -1,5 +1,6 @@
 package graft.ml
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -159,14 +160,21 @@ object Gan {
     }
   }
 
-  /** Train on a (vec_id, x: Array[Double]) DataFrame. */
+  /** Train on a (vec_id, x: Array[Double]) DataFrame. The rows are
+    * cached for the rounds' repeated passes and released when training
+    * ends, so repeated calls do not pile up cached copies.
+    */
   def train(data: DataFrame, cfg: Config = Config()): Model = {
-    val sc = data.sparkSession.sparkContext
+    val rdd = data.select("x").rdd.map(_.getSeq[Double](0).toArray).cache()
+    try trainRounds(rdd, cfg) finally rdd.unpersist()
+  }
+
+  private def trainRounds(rdd: RDD[Array[Double]], cfg: Config): Model = {
+    val sc = rdd.sparkContext
     val dis = mkDis(cfg)
     val gen = mkGen(cfg)
     var dP = dis.init(cfg.seed)
     var gP = gen.init(cfg.seed + 1)
-    val rdd = data.select("x").rdd.map(_.getSeq[Double](0).toArray).cache()
     val span = estBatchesPerPart(rdd.count(), rdd.getNumPartitions, cfg.batchSize)
 
     for (round <- 0 until cfg.rounds) {
@@ -250,11 +258,20 @@ object Gan {
     * three parameter vectors are averaged in one treeAggregate.
     * Returns the GAN model plus the trained head (a linear-softmax layer
     * over the dis features, like the reference's dense+softmax head,
-    * :337-364).
+    * :337-364). The (x, label) rows stay cached through the last round,
+    * head-polish rounds included, and are released on return.
     */
   def trainCoTrained(data: DataFrame, nClasses: Int, cfg: Config = Config(),
       lrHead: Double = 0.05): (Model, Array[Double]) = {
-    val sc = data.sparkSession.sparkContext
+    val rdd = data.select("x", "label").rdd
+      .map(r => (r.getSeq[Double](0).toArray, r.getInt(1)))
+      .cache()
+    try coTrainRounds(rdd, nClasses, cfg, lrHead) finally rdd.unpersist()
+  }
+
+  private def coTrainRounds(rdd: RDD[(Array[Double], Int)], nClasses: Int,
+      cfg: Config, lrHead: Double): (Model, Array[Double]) = {
+    val sc = rdd.sparkContext
     val dis = mkDis(cfg)
     val gen = mkGen(cfg)
     val nFeat = {
@@ -264,9 +281,6 @@ object Gan {
     var dP = dis.init(cfg.seed)
     var gP = gen.init(cfg.seed + 1)
     var hP = new Array[Double](nFeat * nClasses + nClasses) // zero-init softmax head
-    val rdd = data.select("x", "label").rdd
-      .map(r => (r.getSeq[Double](0).toArray, r.getInt(1)))
-      .cache()
     val span = estBatchesPerPart(rdd.count(), rdd.getNumPartitions, cfg.batchSize)
 
     for (round <- 0 until cfg.rounds) {

@@ -987,8 +987,7 @@ object Similarity {
     val nSub = graft.ml.Centroids.PqSub
     val nCodes = graft.ml.Centroids.PqCodes
     val subDim = 64 / nSub
-    val qdiv = transform(col("qvec"),
-      x => x / sqrt(VectorExprs.dotProduct(col("qvec"), col("qvec"))))
+    val qdiv = VectorExprs.l2Normalize(col("qvec"))
     // probe list in one referenced-object projection (same codegen-limit
     // story as ivfBatchTopK; stays a pure projection for the stream path)
     val topk = org.apache.spark.sql.GraftBridge.column(
@@ -1038,6 +1037,18 @@ object Similarity {
     * vector by exact cosine with the map-side WindowGroupLimit cut — the
     * O(n²·m²/cells) scale path for graph consumers (q35's neighbor
     * embedding) where the exact q52 graph would cost the full O(n²).
+    *
+    * Side `a` is hash-repartitioned on `cell` into the session's shuffle
+    * partitions. The cached assignments inherit the corpus's partition
+    * count — ONE at sf0.1 (a single parquet file) — and the broadcast
+    * join streams side `a`, so without the repartition the cell join,
+    * all 1.4M dot products and the map-side window cut would run as ONE
+    * task at sf0.1 while the other cores idle. At sf1 and above the
+    * planner picks a sort-merge join, which requires exactly this hash
+    * partitioning on `cell`: the repartition stands in for the join's
+    * own exchange there, so it adds no shuffle (QuantizerSpec pins the
+    * exchange count with broadcast joins off). The edge set does not
+    * depend on partitioning.
     */
   def approxKnnGraph(s: SparkSession, d: String, k: Int): DataFrame = {
     // embeddings ride along with the cell assignment, so the whole graph
@@ -1046,7 +1057,8 @@ object Similarity {
     // dense_rank, and the final distinct is over the tiny O(n·k) output.
     val cells = graft.dedup.Dedup.seedCellAssignments(s, d)
     val a = cells.select(col("cell"), col("vec_id").as("id_a"),
-      col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
+        col("embedding").as("emb_a"), col("nrm").as("nrm_a"))
+      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("cell"))
     val b = cells.select(col("cell"), col("vec_id").as("id_b"),
       col("embedding").as("emb_b"), col("nrm").as("nrm_b"))
     val w = Window.partitionBy("id_a").orderBy(desc("cos_sim"), asc("id_b"))

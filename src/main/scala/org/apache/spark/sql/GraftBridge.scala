@@ -13,6 +13,10 @@ object GraftBridge {
   def column(e: Expression): Column = Column(ExpressionColumnNode(e))
   def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 
+  /** The error ANSI `Divide` raises on a zero divisor (DIVIDE_BY_ZERO). */
+  def divideByZeroError(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+
   /** Register a SQL function on a live session (the imperative counterpart
     * of `SparkSessionExtensions.injectFunction`, for sessions built
     * without `spark.sql.extensions`).
