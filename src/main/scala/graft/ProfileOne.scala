@@ -10,6 +10,8 @@ import org.apache.spark.scheduler._
   * After both reps it lists the largest cached RDDs by memory. Not part
   * of the driver contract.
   *
+  * The last line per query lists each non-empty [[Memo]] and its entries.
+  *
   * Usage: SPARK_GRAFT_SF_DIR=<sfDir> runMain graft.ProfileOne <query>...
   */
 object ProfileOne {
@@ -64,6 +66,8 @@ object ProfileOne {
       infos.take(8).foreach { i =>
         println(f"   ${i.memSize / 1048576.0}%8.1f MiB  ${i.name.linesIterator.next()}")
       }
+      val held = Memos.held.filter(_._2 > 0)
+      println(s"== $n memos: " + held.map { case (m, k) => s"$m=$k" }.mkString(" "))
     }
     spark.stop()
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** Parquet table loaders for the TPC-H-ish test schema.
   *
@@ -73,24 +74,18 @@ object Tables {
     * grid-chunk count). At cluster scale this is the value a catalog
     * statistic would provide; the memo is the local stand-in.
     */
-  private val embCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-  Memos.register { () => embCountMemo.clear() }
+  private val embCountMemo = new Memo[(SparkSession, String), Long]("tables.embeddingsCount")
   def embeddingsCount(s: SparkSession, d: String): Long =
-    embCountMemo.computeIfAbsent((s, d),
-      { _ => java.lang.Long.valueOf(embeddings(s, d).count()) }).longValue()
+    embCountMemo((s, d))(embeddings(s, d).count())
 
   /** Memoized `documents` row count — same catalog-statistic stand-in as
     * [[embeddingsCount]], shared by the corpus-size gates that pick a
     * plan (q204's factored path) or a storage level (the shingle dict)
     * by corpus regime.
     */
-  private val docCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-  Memos.register { () => docCountMemo.clear() }
+  private val docCountMemo = new Memo[(SparkSession, String), Long]("tables.documentsCount")
   def documentsCount(s: SparkSession, d: String): Long =
-    docCountMemo.computeIfAbsent((s, d),
-      { _ => java.lang.Long.valueOf(documents(s, d).count()) }).longValue()
+    docCountMemo((s, d))(documents(s, d).count())
 
   /** Scan-width fan-out for LONG per-row CPU kernels over an unsplit
     * input (guide §2.5's unsplittable-input rule: "repartition
@@ -120,8 +115,29 @@ object Tables {
   }
 }
 
-/** Registry for the engine's session-lifetime memo caches (cached
-  * signature DataFrames, trained quantizers, persisted index tables).
+/** One session-lifetime memo cache (a cached signature DataFrame, a
+  * trained quantizer, a persisted index table) keyed by (session, corpus
+  * dir, ...). `apply` builds each key's value exactly once, however many
+  * callers race on it (`computeIfAbsent`); a build must not re-enter its
+  * own memo, though it may call other memos. [[clear]] runs `release` on
+  * each held value (unpersisting a cached frame) and forgets it.
+  * Constructing a memo registers it with [[Memos]].
+  */
+final class Memo[K, V](val name: String, release: V => Unit = (_: V) => ()) {
+  private val map = new java.util.concurrent.ConcurrentHashMap[K, V]()
+  Memos.add(this)
+
+  def apply(key: K)(build: => V): V = map.computeIfAbsent(key, _ => build)
+
+  def size: Int = map.size
+
+  def clear(): Unit = map.keySet.forEach { k =>
+    val v = map.remove(k)
+    if (v != null) release(v)
+  }
+}
+
+/** Registry of the engine's [[Memo]]s.
   *
   * The memos assume a STATIC corpus per (session, dir) — the right trade
   * for batch pipelines where one snapshot is queried many times. A
@@ -133,20 +149,21 @@ object Tables {
   * field.
   */
 object Memos {
-  private val clearers =
-    new java.util.concurrent.CopyOnWriteArrayList[() => Unit]()
+  private val all = new java.util.concurrent.CopyOnWriteArrayList[Memo[_, _]]()
 
-  /** Called once per memo site at class-init; `f` drops that memo's state
-    * (unpersisting any cached DataFrames it holds).
-    */
-  def register(f: () => Unit): Unit = clearers.add(f)
+  private[graft] def add(m: Memo[_, _]): Unit = all.add(m)
 
   /** Drop every registered memo: cached plans unpersist, trained models
     * and table registrations forget. Persisted table FILES under the
     * warehouse dir survive (they are corpus-snapshot artifacts); their
     * next use rebuilds the catalog entry via overwrite.
     */
-  def clearAll(): Unit = clearers.forEach(f => f())
+  def clearAll(): Unit = all.forEach(_.clear())
+
+  /** (name, entries) of every memo registered so far — memos register
+    * when their owning object first initializes.
+    */
+  def held: Seq[(String, Int)] = all.asScala.toSeq.map(m => m.name -> m.size)
 
   /** Collision-free table-name token for a corpus dir: the first 16 hex
     * chars of SHA-256 over the CANONICAL path (a 32-bit `hashCode` can

@@ -348,14 +348,13 @@ object Dedup {
     * candidates, q42's pairs, q45/q46 via the label memo. The in-memory
     * analogue of the persisted signature table (writeSignatureTable).
     */
-  private val bandedMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-  graft.Memos.register { () => bandedMemo.values.forEach(_.unpersist()); bandedMemo.clear() }
+  private val bandedMemo = new graft.Memo[(SparkSession, String), DataFrame](
+    "dedup.bandedSignatures", _.unpersist())
   private def bandedCached(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    bandedMemo.computeIfAbsent((s, d), { _ =>
+    bandedMemo((s, d)) {
       bandedSignatures(Tables.documents(s, d)).cache()
-    })
+    }
 
   /** Banded MinHash signatures (doc_id, sig, band, key) — the persisted
     * "signature table" of a production dedup pipeline: computed once per
@@ -464,12 +463,11 @@ object Dedup {
     * CACHED — the pair self-join would otherwise run the 4 polynomial
     * token hashes on both sides (same rationale as [[bandedCached]]).
     */
-  private val simhashMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-  graft.Memos.register { () => simhashMemo.values.forEach(_.unpersist()); simhashMemo.clear() }
+  private val simhashMemo = new graft.Memo[(SparkSession, String), DataFrame](
+    "dedup.simhashBands", _.unpersist())
   private def simhashBandedCached(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    simhashMemo.computeIfAbsent((s, d), { _ =>
+    simhashMemo((s, d)) {
       Tables.documents(s, d)
         .select(col("doc_id"),
           VectorExprs.simHash64(array_distinct(split(trim(col("text")), "\\s+"))).as("simhash"))
@@ -477,7 +475,7 @@ object Dedup {
           "transform(sequence(0, 3), b -> named_struct('band', b, 'key', shiftright(simhash, b * 16) & 65535))")).as("bk"))
         .select(col("doc_id"), col("simhash"), col("bk.band"), col("bk.key"))
         .cache()
-    })
+    }
 
   // q43 — 64-bit SimHash near-dup: per-bit weighted token-hash vote, then
   // 4×16-bit band blocking for hamming-distance candidates. Token hashes
@@ -566,9 +564,8 @@ object Dedup {
     * (vec_id, cell) rely on Catalyst column pruning to drop the carried
     * vector.
     */
-  private val cellsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-  graft.Memos.register { () => cellsMemo.values.forEach(_.unpersist()); cellsMemo.clear() }
+  private val cellsMemo = new graft.Memo[(SparkSession, String), DataFrame](
+    "dedup.seedCells", _.unpersist())
 
   /** [[seedCellAssignmentsUncached]] memoized and CACHED per (session,
     * corpus): q44 self-joins the assignments (both sides would re-score
@@ -576,7 +573,7 @@ object Dedup {
     */
   private[graft] def seedCellAssignments(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    cellsMemo.computeIfAbsent((s, d), { _ => seedCellAssignmentsUncached(s, d).cache() })
+    cellsMemo((s, d))(seedCellAssignmentsUncached(s, d).cache())
 
   /** The blocking quantizer's codebook, GATED on corpus size (the
     * 100-TB lever shared with [[graft.ml.Centroids]]): at or below
@@ -826,14 +823,13 @@ object Dedup {
     * propagation per (session, corpus), memoized — the two consumers used
     * to recompute the whole MinHash pipeline each.
     */
-  private val labelsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-  graft.Memos.register { () => labelsMemo.values.forEach(_.unpersist()); labelsMemo.clear() }
+  private val labelsMemo = new graft.Memo[(SparkSession, String), DataFrame](
+    "dedup.clusterLabels", _.unpersist())
   private def clusterLabels(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    labelsMemo.computeIfAbsent((s, d), { _ =>
+    labelsMemo((s, d)) {
       connectedComponents(q42.fn(s, d).select("id_a", "id_b"))
-    })
+    }
 
   // q45 — near-dup clusters: MinHash candidate pairs → connected
   // components → per-cluster keep-first (the end-to-end LLM dedup
@@ -982,12 +978,10 @@ object Dedup {
     * binary literal so the probe stays a stateless per-row predicate,
     * which is what lets it run inside a streaming projection.
     */
-  private val bloomMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), Array[Byte]]()
-  graft.Memos.register { () => bloomMemo.clear() }
+  private val bloomMemo = new graft.Memo[(SparkSession, String), Array[Byte]]("dedup.evalGramBloom")
   private[graft] def evalGramBloom(s: org.apache.spark.sql.SparkSession,
       d: String): Array[Byte] =
-    bloomMemo.computeIfAbsent((s, d), { _ =>
+    bloomMemo((s, d)) {
       graft.plans.GraftExtensions.register(s)
       Tables.documents(s, d).filter(col("doc_id") % 50 === 0)
         .select(explode(array_distinct(
@@ -995,7 +989,7 @@ object Dedup {
         .agg(expr("bloom_filter_agg(xxhash64(gram), 2000000L, 48000000L)")
           .as("b"))
         .take(1)(0).getAs[Array[Byte]](0)
-    })
+    }
 
   /** Per-doc contamination flags from a prebuilt Bloom filter: adds
     * `maybe_contaminated` = any 20-char gram might be in the eval set.
@@ -1020,12 +1014,11 @@ object Dedup {
     * bucket counts on `bkey` so every candidate join below reads
     * co-located buckets with no Exchange.
     */
-  private val incMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), (String, String)]()
-  graft.Memos.register { () => incMemo.clear() }
+  private val incMemo = new graft.Memo[(SparkSession, String), (String, String)](
+    "dedup.incrementalSigTables")
   private[graft] def incrementalSigTables(s: org.apache.spark.sql.SparkSession,
       d: String): (String, String) =
-    incMemo.computeIfAbsent((s, d), { _ =>
+    incMemo((s, d)) {
       val suffix = graft.Memos.pathToken(d)
       val docs = Tables.documents(s, d)
       val ct = s"graft_sig_corpus_$suffix"
@@ -1033,7 +1026,7 @@ object Dedup {
       writeSignatureTableFor(docs.filter(col("doc_id") % 10 =!= 0), ct, 8)
       writeSignatureTableFor(docs.filter(col("doc_id") % 10 === 0), bt, 8)
       (ct, bt)
-    })
+    }
 
   /** STREAMING incremental dedup flags — q48's decision as documents
     * ARRIVE: each micro-batch computes its banded MinHash signatures
@@ -1688,12 +1681,11 @@ object Dedup {
     * per (session, corpus dir). v0 = standing corpus (doc_id % 10 != 0),
     * v1 = v0 + the batch (doc_id % 10 = 0).
     */
-  private val snapMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), (String, Long, Long)]()
-  graft.Memos.register { () => snapMemo.clear() }
+  private val snapMemo = new graft.Memo[(SparkSession, String), (String, Long, Long)](
+    "dedup.snapshotDocs")
   private def snapshotDocTable(s: org.apache.spark.sql.SparkSession,
       d: String): (String, Long, Long) =
-    snapMemo.computeIfAbsent((s, d), { _ =>
+    snapMemo((s, d)) {
       val dir = java.nio.file.Files.createTempDirectory(
         s"graft-snapdocs-${graft.Memos.pathToken(d)}").toString + "/docs"
       val docs = Tables.documents(s, d).select("doc_id", "text")
@@ -1702,7 +1694,7 @@ object Dedup {
       val v1 = graft.sources.SnapshotTable.append(s, dir,
         docs.filter(col("doc_id") % 10 === 0))
       (dir, v0, v1)
-    })
+    }
 
   // q132 — SNAPSHOT-DELTA signature refresh: the index-maintenance face
   // of incremental dedup. An append lands as snapshot v1 over corpus v0;
@@ -2025,11 +2017,8 @@ object Dedup {
     * q204 plan references the dictionary from three branches — without
     * the cache each branch would replay the vocab sort.
     */
-  private val shingleDictMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  graft.Memos.register { () =>
-    shingleDictMemo.values.forEach(_.unpersist()); shingleDictMemo.clear()
-  }
+  private val shingleDictMemo = new graft.Memo[(SparkSession, String), DataFrame](
+    "dedup.shingleDict", _.unpersist())
   /** The dict-build vocabulary aggregate (token → df), exposed so the
     * plan suite can assert its map-side combine on the JOB that contains
     * it: [[Dict.rankIds]]' zipWithIndex severs plan lineage, so q204's
@@ -2043,7 +2032,7 @@ object Dedup {
       .groupBy("token").agg(count(lit(1)).as("df"))
 
   private[graft] def shingleDict(s: SparkSession, d: String): DataFrame =
-    shingleDictMemo.computeIfAbsent((s, d), { _ =>
+    shingleDictMemo((s, d)) {
       // df rides in the cache: the (df, token) rank order puts the df=1
       // singletons at tids [0, S), so S = count(df = 1) — the gated
       // plan's core-split threshold — is one in-memory filter instead of
@@ -2065,7 +2054,7 @@ object Dedup {
         else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       Dict.rankIds(shingleVocabDf(s, d).orderBy("df", "token"), "tid")
         .select("token", "tid", "df").persist(level)
-    })
+    }
 
   /** S = the corpus's df=1 singleton-token count — the gated q204
     * plan's core-split threshold (singletons are exactly tids [0, S)
@@ -2356,17 +2345,13 @@ object Dedup {
     * reuses the same index (longer thresholds need shorter prefixes —
     * monotone, so the stored prefix is a superset).
     */
-  private val pfMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), (String, String, String, Boolean)]()
-  graft.Memos.register { () => pfMemo.clear() }
-  /** Test hook: drop the memoized snapshot so a forced-gate spec can
-    * rebuild the index under the big-corpus rule (writeBucketed
-    * overwrites, so a rebuild is safe).
-    */
-  private[graft] def clearPrefixIndexMemo(): Unit = pfMemo.clear()
+  // private[graft]: the forced-gate spec clears it to rebuild the index
+  // under the big-corpus rule (writeBucketed overwrites, so that is safe)
+  private[graft] val pfMemo =
+    new graft.Memo[(SparkSession, String), (String, String, String, Boolean)]("dedup.prefixIndex")
   private[graft] def prefixIndexTables(s: SparkSession,
       d: String): (String, String, String, Boolean) =
-    pfMemo.computeIfAbsent((s, d), { _ =>
+    pfMemo((s, d)) {
       val suffix = graft.Memos.pathToken(d)
       val (dfT, prefT, docsT) = (s"graft_pf_df_$suffix",
         s"graft_pf_prefix_$suffix", s"graft_pf_docs_$suffix")
@@ -2418,7 +2403,7 @@ object Dedup {
         prefT, "tid", 8)
       docsArt.unpersist(false)
       (dfT, prefT, docsT, gated)
-    })
+    }
 
   /** q217's body with the threshold and limit exposed (the spec replays
     * append-vs-rebuild equality without the LIMIT). Only the BATCH is

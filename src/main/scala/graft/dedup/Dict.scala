@@ -59,9 +59,8 @@ object Dict {
     */
   val GramVocabCap: Int = 1 << 20
 
-  private val gramVocabMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Array[String]]()
-  graft.Memos.register { () => gramVocabMemo.clear() }
+  private val gramVocabMemo =
+    new graft.Memo[(SparkSession, String), Array[String]]("dict.gramVocab")
 
   /** The corpus's lex-sorted distinct char-3-gram vocabulary — the
     * reference order behind [[graft.functions.EncodeSortedGrams]] id
@@ -69,7 +68,7 @@ object Dict {
     * (map-side partials over per-doc deduped gram arrays).
     */
   def gramVocab(s: SparkSession, d: String): Array[String] =
-    gramVocabMemo.computeIfAbsent((s, d), { _ =>
+    gramVocabMemo((s, d)) {
       val rows = Tables.documents(s, d)
         .select(explode(array_distinct(
           graft.functions.VectorExprs.charNgrams(col("text"), 3))).as("g"))
@@ -81,5 +80,5 @@ object Dict {
         s"char-3-gram vocabulary exceeds the $GramVocabCap driver bound — " +
           "switch this corpus to the distributed rankIds dictionary")
       rows.map(_.getString(0))
-    })
+    }
 }

@@ -26,19 +26,15 @@ object Graph {
     * side's layout — only the O(n) state table moves per round, the
     * pageRankCore discipline.
     */
-  private val symEdgesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), DataFrame]()
-  graft.Memos.register { () =>
-    symEdgesMemo.values.forEach(df => df.unpersist(false))
-    symEdgesMemo.clear()
-  }
+  private val symEdgesMemo = new graft.Memo[(SparkSession, String, Int), DataFrame](
+    "graph.symKnnEdges", _.unpersist(false))
   def symKnnEdgesCached(s: SparkSession, d: String, k: Int): DataFrame =
-    symEdgesMemo.computeIfAbsent((s, d, k), { _ =>
+    symEdgesMemo((s, d, k)) {
       val fwd = graft.sim.Similarity.approxKnnGraphCached(s, d, k)
         .select(col("id_a").as("src"), col("id_b").as("dst"))
       fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
         .distinct().repartition(col("dst")).cache()
-    })
+    }
 
   /** Distributed PageRank over a directed edge list (`src`, `dst`
     * columns). Rank convention sums to N (teleport term `1 − d` per

@@ -75,9 +75,7 @@ object Centroids {
   def unitVec: Column =
     array_to_vector(VectorExprs.l2Normalize(col("embedding")))
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), KMeansModel]()
-  graft.Memos.register { () => memo.clear() }
+  private val memo = new graft.Memo[(SparkSession, String, Long), KMeansModel]("ml.kmeans")
 
   def model(s: SparkSession, dir: String): KMeansModel =
     modelFor(s, dir, QuantizerGateRows)
@@ -88,7 +86,7 @@ object Centroids {
     */
   private[graft] def modelFor(s: SparkSession, dir: String,
       gateRows: Long): KMeansModel =
-    memo.computeIfAbsent((s, dir, gateRows), { _ =>
+    memo((s, dir, gateRows)) {
       val n = Tables.embeddingsCount(s, dir)
       val base = Tables.embeddings(s, dir)
       // Frozen tier: fit on a deterministic stride sample of ≤ gateRows
@@ -104,7 +102,7 @@ object Centroids {
         .setK(kForCount(n, gateRows)).setSeed(666L).setMaxIter(10)
         .setSolver("block").setFeaturesCol("fvec")
         .fit(src)
-    })
+    }
 
   /** Centroid vectors as plain arrays — O(k·d), safe to embed as plan
     * literals / ship in a closure.
@@ -127,17 +125,16 @@ object Centroids {
     * seed and reads the same cached rows, so the codebooks are the
     * sequential ones bit for bit. The pool is created inside
     * the call: its threads inherit the caller's Spark local properties
-    * (job group, description). The fit body must not enter any memo's
-    * `computeIfAbsent` — the call already runs inside [[pqMemo]]'s.
+    * (job group, description). The fit body must not enter any memo —
+    * the call already runs inside [[pqMemo]]'s build.
     */
   val PqSub = 8
   val PqCodes = 16
   private val pqMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Array[Array[Double]]]]()
-  graft.Memos.register { () => pqMemo.clear() }
+    new graft.Memo[(SparkSession, String), Array[Array[Array[Double]]]]("ml.pqCodebooks")
 
   def pqCodebooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqMemo.computeIfAbsent((s, dir), { _ =>
+    pqMemo((s, dir)) {
       val subDim = 64 / PqSub
       // spherical: codebooks fit on L2-normalized vectors, matching the
       // cosine rerank downstream (see `unitVec` note)
@@ -162,5 +159,5 @@ object Centroids {
         pool.shutdown()
         base.unpersist()
       }
-    })
+    }
 }

@@ -443,9 +443,8 @@ object Gan {
     best
   }
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Config), (Model, DataFrame)]()
-  graft.Memos.register { () => memo.values.forEach(v => v._2.unpersist()); memo.clear() }
+  private val memo = new graft.Memo[(SparkSession, String, Config), (Model, DataFrame)](
+    "ml.gan", _._2.unpersist())
 
   /** Train on the sf `embeddings` table, min-max scaled. Memoized per
     * (session, dir, config): the catalog's feature/generate/classify
@@ -455,8 +454,8 @@ object Gan {
     * to a stopped one.
     */
   def trainOnEmbeddings(s: SparkSession, dir: String, cfg: Config = Config()): (Model, DataFrame) =
-    memo.computeIfAbsent((s, dir, cfg), { _ =>
+    memo((s, dir, cfg)) {
       val data = scaled01(Tables.embeddings(s, dir), cfg.dataDim).cache()
       (train(data, cfg), data)
-    })
+    }
 }

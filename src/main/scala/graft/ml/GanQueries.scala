@@ -176,12 +176,13 @@ object GanQueries {
     val src = Tables.embeddings(s, d)
       .withColumn("fvec", array_to_vector(col("embedding").cast("array<double>")))
     val pca = new PCA().setInputCol("fvec").setOutputCol("pc").setK(2).fit(src)
-    var y = pca.transform(src)
+    val y0 = pca.transform(src)
       .select(col("vec_id"), col("label"),
         vector_to_array(col("pc")).getItem(0).as("y1"),
         vector_to_array(col("pc")).getItem(1).as("y2"))
       .cache()
-    val knn = graft.sim.Similarity.approxKnnGraph(s, d, k = 3).cache()
+    val knn = graft.sim.Similarity.approxKnnGraphCached(s, d, 3)
+    var y = y0
     // Few strong attraction steps: each iteration is 2 shuffles on the
     // id key regardless of data volume, so iteration count — not row
     // count — is the latency driver; 4×α=0.45 contracts like 8×α=0.3.
@@ -198,6 +199,8 @@ object GanQueries {
       // truncate lineage once mid-loop; otherwise stay lazy — fewer jobs
       y = if (iter == 2) next.localCheckpoint() else next
     }
+    // the iteration-2 checkpoint cut y0 from y's lineage
+    y0.unpersist()
     y.select(col("vec_id"), col("label"),
         round(col("y1"), 6).as("y1"), round(col("y2"), 6).as("y2"))
       .orderBy("vec_id")

@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Memos, QueryDef, Tables}
+import graft.{Memo, QueryDef, Tables}
 import graft.functions.VectorExprs
 
 /** ZCA/Mahalanobis whitening of the embedding space (the PCA-family
@@ -28,9 +28,7 @@ object Whitening {
   final case class Model(mean: Array[Double], cinv: Array[Double],
       wrows: Array[Double], k: Int, dim: Int)
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Model]()
-  Memos.register { () => memo.clear() }
+  private val memo = new Memo[(SparkSession, String), Model]("ml.whitening")
 
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix (classic
     * textbook algorithm — Golub & Van Loan §8.5): returns (eigenvalues,
@@ -99,7 +97,7 @@ object Whitening {
     * (session, dir) like the IVF quantizer.
     */
   def model(s: SparkSession, d: String, k: Int = 2): Model =
-    memo.computeIfAbsent((s, d), { _ =>
+    memo((s, d)) {
       import s.implicits._
       val dim = 64
       // (Σx, Σxxᵀ upper triangle flattened full, n) in one pass;
@@ -155,7 +153,7 @@ object Whitening {
         while (ii < dim) { wrows(jj * dim + ii) = v(ii)(r) * s0; ii += 1 }
       }
       Model(mean, cinv, wrows, k, dim)
-    })
+    }
 
   // q153 — Mahalanobis whitening audit: per-vector Mahalanobis² against
   // the corpus covariance (the covariance-aware outlier score q38's

@@ -461,15 +461,14 @@ object Binary {
       .saveAsTable(table)
   }
 
-  private val binCorpusMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-  graft.Memos.register { () => binCorpusMemo.clear() }
+  private val binCorpusMemo =
+    new graft.Memo[(SparkSession, String), String]("multimodal.binaryCorpus")
   private[graft] def binaryCorpusTable(s: SparkSession, d: String): String =
-    binCorpusMemo.computeIfAbsent((s, d), { _ =>
+    binCorpusMemo((s, d)) {
       val t = s"graft_bincorpus_${graft.Memos.pathToken(d)}"
       writeBinaryCorpus(s, d, t)
       t
-    })
+    }
 
   // q71 — batched partition-parallel feature extraction over REAL PNG
   // payloads (r10): the persisted binary corpus's `png` column decodes

@@ -53,17 +53,15 @@ object Incremental {
     * once per (session, corpus dir) — the signature-table treatment.
     */
   private val MvBuckets = 8
-  private val mvMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-  graft.Memos.register { () => mvMemo.clear() }
+  private val mvMemo = new graft.Memo[(SparkSession, String), String]("incremental.baseAgg")
   private[graft] def baseAggTable(s: SparkSession, d: String): String =
-    mvMemo.computeIfAbsent((s, d), { _ =>
+    mvMemo((s, d)) {
       val t = s"graft_mv_orders_${graft.Memos.pathToken(d)}"
       ScaleJoins.writeBucketed(
         orderAgg(Tables.orders(s, d).filter(col("o_orderkey") % 10 =!= 0)),
         t, "o_custkey", MvBuckets)
       t
-    })
+    }
 
   // q104 — INCREMENTAL AGGREGATE (materialized-view maintenance): the
   // standing per-customer order aggregate is a persisted bucketed
@@ -204,11 +202,9 @@ object Incremental {
     events.select(expr("ts_us div 86400000000").as("day"), col("user_id"))
       .groupBy("day").agg(expr("hll_sketch_agg(user_id)").as("sk"))
 
-  private val duMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-  graft.Memos.register { () => duMemo.clear() }
+  private val duMemo = new graft.Memo[(SparkSession, String), String]("incremental.dailyUsers")
   private[graft] def dailyUserTable(s: SparkSession, d: String): String =
-    duMemo.computeIfAbsent((s, d), { _ =>
+    duMemo((s, d)) {
       val t = s"graft_mv_daily_users_${graft.Memos.pathToken(d)}"
       dailyUserSketch(Tables.events(s, d).filter(col("event_id") % 10 =!= 0))
         .write.mode("overwrite")
@@ -218,7 +214,7 @@ object Incremental {
           s"${s.sessionState.conf.warehousePath}/graft-mv/$t")
         .saveAsTable(t)
       t
-    })
+    }
 
   // q169 — INCREMENTAL DISTINCT-COUNT maintenance (daily active users —
   // THE metric every warehouse keeps current, and the one a q104-style

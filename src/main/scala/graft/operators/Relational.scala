@@ -1219,7 +1219,7 @@ object Relational {
     val base = s"${s.sessionState.conf.warehousePath}/graft-zaudit/${graft.Memos.pathToken(d)}"
     val (natPath, mPath, hPath) =
       (s"$base/natural", s"$base/morton", s"$base/hilbert")
-    zAuditStaged.computeIfAbsent((s, d), { _ =>
+    zAuditStaged((s, d)) {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("ts_us"), col("value"))
       ev.repartitionByRange(16, col("event_id"))
@@ -1228,8 +1228,8 @@ object Relational {
       graft.sources.ZOrder.writeZOrdered(ev, mPath, "user_id", "ts_us", 16)
       graft.sources.ZOrder.writeZOrdered(ev, hPath, "user_id", "ts_us", 16,
         curve = "hilbert")
-      java.lang.Boolean.TRUE
-    })
+      true
+    }
     // probe rectangle: the centered 10% band in each dimension, from a
     // 1-row bounds aggregate (driver read of a constant-size result)
     val b = Tables.events(s, d).agg(
@@ -1271,8 +1271,7 @@ object Relational {
   }
 
   private val zAuditStaged =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Boolean]()
-  graft.Memos.register { () => zAuditStaged.clear() }
+    new graft.Memo[(SparkSession, String), Boolean]("relational.zAuditStaged")
 
   // q164 — QUANTILE-SKETCH calibration audit (the third member of the
   // sketch-honesty family: q145 calibrates MinHash, q158 the IVF index,
@@ -3453,19 +3452,10 @@ object Relational {
       col("l_returnflag").as("flag"),
       expr("cast(round(l_quantity) as bigint)").as("qv"),
       expr("cast(round(l_extendedprice * 100) as bigint)").as("cents"))
-    // LAZY localCheckpoint (r14, VERDICT-r13 item 3): mx, my and t all
-    // consume the bounded joint histogram j — ungated, the corpus scan +
-    // 3-key aggregate ran three times (measured at sf0.1: 842+381+160 ms
-    // of triplicate scan stages; ReuseExchange can't see it because each
-    // branch prunes different columns). Lazy, not eager — the r13 eager
-    // checkpoint serialized branches that ran concurrently and was
-    // measured-reverted; the lazy form materializes inside the first
-    // consumer's job and the other branches read the shared blocks.
     val j = li.groupBy(col("flag"), col("qv"), expr("cents div 1000").as("pb"))
       .agg(count(lit(1)).as("cnt"),
         sum("cents").as("scents"),
         sum(expr("cast(cents as decimal(19,0)) * cents")).as("scents2"))
-      .localCheckpoint(false)
     val cum = Window.partitionBy("flag")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val mx = j.groupBy("flag", "qv").agg(sum("cnt").as("cx"))

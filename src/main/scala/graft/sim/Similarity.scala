@@ -163,9 +163,8 @@ object Similarity {
     * above the gate the same edge table feeds q52, q141 and q189 (k=3),
     * and the blocked build is the dominant cost of each.
     */
-  private val knnEdgesMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]()
-  graft.Memos.register { () => knnEdgesMemo.values.forEach(_.unpersist()); knnEdgesMemo.clear() }
+  private val knnEdgesMemo = new graft.Memo[(SparkSession, String, Int), DataFrame](
+    "sim.knnEdges", _.unpersist())
 
   /** Gated kNN edge supplier (id_a, rn, id_b, cos_sim): exact
     * [[q52TopKAgg]] at or below `maxExactRows` vectors, cell-blocked
@@ -177,8 +176,7 @@ object Similarity {
   def knnEdges(s: SparkSession, d: String, k: Int,
       maxExactRows: Long = ExactKnnMaxRows): DataFrame =
     if (Tables.embeddingsCount(s, d) <= maxExactRows) q52TopKAgg(s, d, k = k)
-    else knnEdgesMemo.computeIfAbsent((s, d, k),
-      { _ => blockedKnnEdges(s, d, k).cache() })
+    else knnEdgesMemo((s, d, k))(blockedKnnEdges(s, d, k).cache())
 
   /** DuckDB replay of [[knnEdges]]: a CTE chain ending in
     * `knn(id_a, rn, id_b, cos_sim)` with BOTH tiers behind the same
@@ -940,15 +938,13 @@ object Similarity {
     * concurrent sessions with different warehouses — never share or
     * clobber a table. Registered with [[graft.Memos]].
     */
-  private val indexMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  graft.Memos.register { () => indexMemo.clear() }
+  private val indexMemo = new graft.Memo[(SparkSession, String), String]("sim.ivfIndex")
   private[graft] def indexTable(s: SparkSession, d: String): String =
-    indexMemo.computeIfAbsent((s, d), { _ =>
+    indexMemo((s, d)) {
       val t = s"graft_ann_idx_${graft.Memos.pathToken(d)}"
       writeIndexTable(s, d, t)
       t
-    })
+    }
 
   // q56 — IVF+PQ over the PERSISTED index: identical search to q55, but
   // the probe reads the cell_id-partitioned index table, so the scan
@@ -1077,11 +1073,10 @@ object Similarity {
     * list is consumed by q57 (the graph itself) and q78 (centrality over
     * it), and its window+join would otherwise recompute per consumer.
     */
-  private val knnGraphMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]()
-  graft.Memos.register { () => knnGraphMemo.values.forEach(_.unpersist()); knnGraphMemo.clear() }
+  private val knnGraphMemo = new graft.Memo[(SparkSession, String, Int), DataFrame](
+    "sim.knnGraph", _.unpersist())
   def approxKnnGraphCached(s: SparkSession, d: String, k: Int): DataFrame =
-    knnGraphMemo.computeIfAbsent((s, d, k), { _ => approxKnnGraph(s, d, k).cache() })
+    knnGraphMemo((s, d, k))(approxKnnGraph(s, d, k).cache())
 
   // q57 — the kNN graph's documented SCALE path as a first-class catalog
   // entry: candidate pairs form only inside shared seed-IVF cells (one
@@ -1231,11 +1226,10 @@ object Similarity {
     * arrays only. `scale` is floored at 1e-9 so constant dimensions
     * cannot divide by zero.
     */
-  private val sqMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Array[Double], Array[Double])]()
-  graft.Memos.register { () => sqMemo.clear() }
+  private val sqMemo = new graft.Memo[
+    (SparkSession, String), (Array[Double], Array[Double])]("sim.sqStats")
   private[graft] def sqStats(s: SparkSession, d: String): (Array[Double], Array[Double]) =
-    sqMemo.computeIfAbsent((s, d), { _ =>
+    sqMemo((s, d)) {
       val statsCap = 8192
       val rows = Tables.embeddings(s, d)
         .select(posexplode(col("embedding")).as(Seq("pos", "x")))
@@ -1253,7 +1247,7 @@ object Similarity {
       val scale = rows.map(r =>
         math.max((r.getAs[Double]("mx") - r.getAs[Double]("mn")) / 255.0, 1e-9))
       (mn, scale)
-    })
+    }
 
   /** Materialize the SQ8 code table — (vec_id, codes array<tinyint>),
     * code = round((x − mn_d)/scale_d) − 128 under the per-dim trained
@@ -1282,15 +1276,13 @@ object Similarity {
       .saveAsTable(table)
   }
 
-  private val sq8Memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  graft.Memos.register { () => sq8Memo.clear() }
+  private val sq8Memo = new graft.Memo[(SparkSession, String), String]("sim.sq8Table")
   private[graft] def sq8Table(s: SparkSession, d: String): String =
-    sq8Memo.computeIfAbsent((s, d), { _ =>
+    sq8Memo((s, d)) {
       val t = s"graft_sq8_${graft.Memos.pathToken(d)}"
       writeSq8Table(s, d, t)
       t
-    })
+    }
 
   /** q77's candidate stage: approximate-cosine top-50 over the PERSISTED
     * code table. The scan reads (vec_id, codes) only — PlanSpec asserts
@@ -1552,16 +1544,14 @@ object Similarity {
       .saveAsTable(entryTable)
   }
 
-  private val nswMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String)]()
-  graft.Memos.register { () => nswMemo.clear() }
+  private val nswMemo = new graft.Memo[(SparkSession, String), (String, String)]("sim.nswTables")
   private[graft] def nswTables(s: SparkSession, d: String): (String, String) =
-    nswMemo.computeIfAbsent((s, d), { _ =>
+    nswMemo((s, d)) {
       val tok = graft.Memos.pathToken(d)
       val t = (s"graft_nsw_adj_$tok", s"graft_nsw_entry_$tok")
       writeNswTables(s, d, t._1, t._2)
       t
-    })
+    }
 
   /** One search hop: the frontier's out-edges scored against the query —
     * a partition-pruned scan of the adjacency (PlanSpec asserts the

@@ -698,12 +698,11 @@ object TextAnalysis {
     * the spec replays the merge sequence against an independent dense
     * reference that applies the same documented prune rule.
     */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Int), Seq[(String, String, Long)]]()
-  graft.Memos.register { () => bpeMemo.clear() }
+  private val bpeMemo = new graft.Memo[
+    (org.apache.spark.sql.SparkSession, String, Int), Seq[(String, String, Long)]]("text.bpeMerges")
   def bpeMerges(s: org.apache.spark.sql.SparkSession, d: String,
       k: Int): Seq[(String, String, Long)] =
-    bpeMemo.computeIfAbsent((s, d, k), { _ => trainBpe(s, d, k) })
+    bpeMemo((s, d, k))(trainBpe(s, d, k))
 
   /** Fraction of total token mass the pruned type table must cover. */
   private[graft] val bpeCoverage = 0.999
@@ -728,12 +727,11 @@ object TextAnalysis {
     * symbols); a bounded model artifact — alphabet ≤ distinct corpus
     * chars (take-guarded), merges O(k).
     */
-  private val bpeVocabMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Int), Array[String]]()
-  graft.Memos.register { () => bpeVocabMemo.clear() }
+  private val bpeVocabMemo = new graft.Memo[
+    (org.apache.spark.sql.SparkSession, String, Int), Array[String]]("text.bpeIdVocab")
   private[graft] def bpeIdVocab(s: org.apache.spark.sql.SparkSession,
       d: String, k: Int): Array[String] =
-    bpeVocabMemo.computeIfAbsent((s, d, k), { _ =>
+    bpeVocabMemo((s, d, k)) {
       val capA = 1 << 16
       val alpha = bpeTypeTable(s, d)
         .select(explode(split(col("word"), "")).as("ch"))
@@ -743,7 +741,7 @@ object TextAnalysis {
       require(alpha.length <= capA,
         s"BPE alphabet overflow: > $capA distinct characters")
       alpha ++ bpeMerges(s, d, k).map { case (l, r, _) => l + r }
-    })
+    }
 
   /** The (word, freq) type table — the distributed training state. */
   private[graft] def bpeTypeTable(s: org.apache.spark.sql.SparkSession,
@@ -2043,15 +2041,13 @@ object TextAnalysis {
         s"${s.sessionState.conf.warehousePath}/graft-textindex/$table")
       .saveAsTable(table)
 
-  private val invIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  graft.Memos.register { () => invIdxMemo.clear() }
+  private val invIdxMemo = new graft.Memo[(SparkSession, String), String]("text.invertedIndex")
   private[graft] def invertedIndexTable(s: SparkSession, d: String): String =
-    invIdxMemo.computeIfAbsent((s, d), { _ =>
+    invIdxMemo((s, d)) {
       val t = s"graft_text_idx_${graft.Memos.pathToken(d)}"
       writeInvertedIndex(s, d, t)
       t
-    })
+    }
 
   /** INCREMENTAL index maintenance: append a batch of new documents'
     * postings to an existing inverted index table — q48's

@@ -48,7 +48,7 @@ class R11OperatorsSpec extends SparkSpec {
         r.getAs[Double]("jaccard"))).toSet
     val ungated = rows(dedup.Dedup.incrementalPrefixJoin(spark, sfDir, tau,
       takeN = 1 << 20))
-    dedup.Dedup.clearPrefixIndexMemo()
+    dedup.Dedup.pfMemo.clear()
     System.setProperty("graft.pf.gate.docs", "0")
     try {
       val gated = rows(dedup.Dedup.incrementalPrefixJoin(spark, sfDir, tau,
@@ -59,7 +59,7 @@ class R11OperatorsSpec extends SparkSpec {
     } finally {
       System.clearProperty("graft.pf.gate.docs")
       // rebuild the ungated snapshot so later tests see the pinned rule
-      dedup.Dedup.clearPrefixIndexMemo()
+      dedup.Dedup.pfMemo.clear()
     }
   }
 
