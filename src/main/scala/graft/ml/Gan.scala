@@ -12,12 +12,14 @@ import graft.Tables
   * and generated (label ~0) samples, then train the generator through the
   * frozen discriminator with target 1 — with the reference's
   * ParameterAveragingTrainingMaster (:325-330) mapped onto Spark
-  * primitives: the driver broadcasts the current parameters, every
-  * partition runs local minibatch SGD over its rows, and one
-  * `treeAggregate` (depth 2) produces the example-weighted parameter
-  * average per round. Communication is O(nParams · partitions) per round,
-  * independent of row count — rows stream through executor partitions, so
-  * the same loop holds on a 1000-executor cluster.
+  * primitives. Every round of every trainer is one [[averagingRound]]:
+  * the driver broadcasts the current parameters, every partition runs
+  * local minibatch SGD over its rows, and the batch-weighted copies are
+  * collected and summed on the driver in partition order, so the average
+  * is bit-stable at any partition count. Communication is
+  * O(nParams · partitions) per round, independent of row count — rows
+  * stream through executor partitions, so the same loop holds on a
+  * 1000-executor cluster.
   */
 object Gan {
 
@@ -74,33 +76,13 @@ object Gan {
 
   /** Min-max scale each embedding dimension to [0,1] (the reference's
     * /255 pixel normalization, gan.ipynb cell 2) — elementwise min/max via
-    * one treeAggregate, then a broadcast rescale pass.
+    * [[ArrayMinMaxScaler.minMax]], then a broadcast rescale pass.
     */
   def scaled01(df: DataFrame, dim: Int): DataFrame = {
     val spark = df.sparkSession
     val rdd = df.select(col("vec_id"), col("embedding")).rdd
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray.map(_.toDouble)))
-    val (mins, maxs) = rdd.map(_._2).treeAggregate(
-      (Array.fill(dim)(Double.MaxValue), Array.fill(dim)(Double.MinValue)))(
-      seqOp = { case ((mn, mx), v) =>
-        var i = 0
-        while (i < dim) {
-          if (v(i) < mn(i)) mn(i) = v(i)
-          if (v(i) > mx(i)) mx(i) = v(i)
-          i += 1
-        }
-        (mn, mx)
-      },
-      combOp = { case ((mn1, mx1), (mn2, mx2)) =>
-        var i = 0
-        while (i < dim) {
-          if (mn2(i) < mn1(i)) mn1(i) = mn2(i)
-          if (mx2(i) > mx1(i)) mx1(i) = mx2(i)
-          i += 1
-        }
-        (mn1, mx1)
-      }, depth = 2)
-    val bc = spark.sparkContext.broadcast((mins, maxs))
+    val bc = spark.sparkContext.broadcast(ArrayMinMaxScaler.minMax(rdd.map(_._2), dim))
     import spark.implicits._
     rdd.map { case (id, v) =>
       val (mn, mx) = bc.value
@@ -128,7 +110,7 @@ object Gan {
     * batches than it wraps `bi % span` and maps several physical batches
     * onto each window slot — selection alone would run a multiple of
     * `cap` local steps there. Callers therefore pair this with a HARD
-    * per-partition counter ([[roundBatchPicker]]) that stops taking
+    * per-partition counter ([[localRound]]) that stops taking
     * batches at `cap` regardless of how many match the window: the
     * window provides cross-round ROTATION (coverage), the counter
     * provides the divergence cap, and the cap holds under partition
@@ -144,19 +126,93 @@ object Gan {
       else pos >= start || pos < end
     }
 
-  /** The per-round batch selector both trainers stream through: the
-    * rotating [[inRoundWindow]] picks WHICH batches this round visits,
-    * and the hard `taken < cap` counter bounds HOW MANY — at most
-    * `cfg.maxBatchesPerRound` local steps per partition per round, even
-    * when the partition holds more batches than the fleet-average span
-    * estimate.
+  /** One partition's local SGD for adversarial round `round`: streams
+    * fixed-size batches off the iterator (only one batch is ever
+    * resident, not the whole partition) and runs `step` on each with the
+    * partition's round-seeded RNG. The rotating [[inRoundWindow]] picks
+    * WHICH batches this round visits, and the hard `taken < cap` counter
+    * bounds HOW MANY — at most `cfg.maxBatchesPerRound` local steps per
+    * partition per round, even when the partition holds more batches than
+    * the fleet-average span estimate. Returns the batches run.
     */
-  private def roundBatchPicker[T](it: Iterator[Seq[T]], round: Int,
-      span: Int, cap: Int): Iterator[Seq[T]] = {
+  private def localRound[T](it: Iterator[T], pid: Int, round: Int, span: Int,
+      cfg: Config)(step: (Seq[T], java.util.Random) => Unit): Long = {
+    val rng = new java.util.Random(cfg.seed + round * 7919L + pid * 131L)
+    val cap = cfg.maxBatchesPerRound
     var taken = 0
-    it.zipWithIndex.collect {
-      case (b, bi) if taken < cap && inRoundWindow(bi, round, span, cap) =>
-        taken += 1; b
+    it.grouped(cfg.batchSize).zipWithIndex.foreach { case (b, bi) =>
+      if (taken < cap && inRoundWindow(bi, round, span, cap)) { step(b, rng); taken += 1 }
+    }
+    taken
+  }
+
+  /** One synchronous parameter-averaging round — the reference's
+    * ParameterAveragingTrainingMaster step, and the one place the
+    * trainers broadcast, combine and average. The driver broadcasts
+    * `params`; every non-empty partition clones them and runs `local`,
+    * which steps the copies in place over the partition's rows and
+    * returns the batches it ran. Each copy is weighted by its batch
+    * count; the weighted copies are collected and summed on the driver
+    * in partition order (a fixed order, so the average is bit-stable at
+    * any partition count; driver bytes per round stay partitions ×
+    * nParams × 8) and divided by the total. With no batch run the round
+    * returns `params` unchanged.
+    */
+  private def averagingRound[T](rdd: RDD[T], params: Seq[Array[Double]])(
+      local: (Int, Iterator[T], Seq[Array[Double]]) => Long): Seq[Array[Double]] = {
+    val bc = rdd.sparkContext.broadcast(params)
+    val parts = try rdd.mapPartitionsWithIndex { (pid, it) =>
+      if (!it.hasNext) Iterator.empty
+      else {
+        val p = bc.value.map(_.clone())
+        val batches = local(pid, it, p)
+        // arrays, not a Seq: a serialized Scala collection would grow
+        // every task result by its class descriptors
+        Iterator((p.map(_.map(_ * batches)).toArray, batches))
+      }
+    }.collect() finally bc.destroy()
+    val n = parts.map(_._2).sum
+    if (n == 0) params
+    else params.indices.map { j =>
+      val sum = new Array[Double](params(j).length)
+      for ((p, _) <- parts) {
+        var i = 0
+        while (i < sum.length) { sum(i) += p(j)(i); i += 1 }
+      }
+      sum.map(_ / n)
+    }
+  }
+
+  /** One adversarial minibatch step, in place on `d` and `g`. */
+  private def adversarialStep(dis: Net, gen: Net, d: Array[Double], g: Array[Double],
+      xs: Seq[Array[Double]], rng: java.util.Random, cfg: Config): Unit = {
+    // --- discriminator step: real→realLabel, fake→(1−realLabel),
+    // interleaved so sequential SGD carries no recency bias toward
+    // either class.
+    xs.foreach { x =>
+      val (cd, o) = dis.fwd(d, x)
+      dis.bwd(d, x, cd, Array(o(0) - cfg.realLabel), cfg.lrD, update = true)
+      val z = Array.fill(cfg.zDim)(rng.nextDouble() * 2 - 1)
+      val fake = gen.fwd(g, z)._2
+      val (cf, of) = dis.fwd(d, fake)
+      dis.bwd(d, fake, cf, Array(of(0) - (1.0 - cfg.realLabel)), cfg.lrD, update = true)
+    }
+    // --- generator step through the frozen discriminator, target 1
+    // (one G step per two D samples, like the reference's 2:1
+    // dis:gen data ratio, java :412-421 vs :463-466)
+    for (_ <- 0 until (xs.length + 1) / 2) {
+      val z = Array.fill(cfg.zDim)(rng.nextDouble() * 2 - 1)
+      val (cg, fake) = gen.fwd(g, z)
+      val (cd, o) = dis.fwd(d, fake)
+      val dx = dis.bwd(d, fake, cd, Array(o(0) - 1.0), 0.0, update = false)
+      // chain through the generator's sigmoid output
+      val dOutG = new Array[Double](cfg.dataDim)
+      var i = 0
+      while (i < cfg.dataDim) {
+        dOutG(i) = dx(i) * fake(i) * (1.0 - fake(i))
+        i += 1
+      }
+      gen.bwd(g, z, cg, dOutG, cfg.lrG, update = true)
     }
   }
 
@@ -170,83 +226,15 @@ object Gan {
   }
 
   private def trainRounds(rdd: RDD[Array[Double]], cfg: Config): Model = {
-    val sc = rdd.sparkContext
     val dis = mkDis(cfg)
     val gen = mkGen(cfg)
-    var dP = dis.init(cfg.seed)
-    var gP = gen.init(cfg.seed + 1)
     val span = estBatchesPerPart(rdd.count(), rdd.getNumPartitions, cfg.batchSize)
-
-    for (round <- 0 until cfg.rounds) {
-      val bcD = sc.broadcast(dP)
-      val bcG = sc.broadcast(gP)
-      // Each partition: local adversarial minibatch SGD from the broadcast
-      // params; emit (localD, localG, nBatches) for the weighted average.
-      val (sumD, sumG, n) = rdd.mapPartitionsWithIndex { (pid, it) =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          val d = bcD.value.clone()
-          val g = bcG.value.clone()
-          val rng = new java.util.Random(cfg.seed + round * 7919L + pid * 131L)
-          var batches = 0L
-          // stream fixed-size batches off the iterator — only one batch is
-          // ever resident, not the whole partition; the rotating window
-          // caps local steps per averaging round (Config.maxBatchesPerRound)
-          roundBatchPicker(it.grouped(cfg.batchSize), round, span,
-            cfg.maxBatchesPerRound).foreach { batch =>
-            // --- discriminator step: real→realLabel, fake→(1−realLabel),
-            // interleaved so sequential SGD carries no recency bias toward
-            // either class.
-            batch.foreach { x =>
-              val (cd, o) = dis.fwd(d, x)
-              dis.bwd(d, x, cd, Array(o(0) - cfg.realLabel), cfg.lrD, update = true)
-              val z = Array.fill(cfg.zDim)(rng.nextDouble() * 2 - 1)
-              val fake = gen.fwd(g, z)._2
-              val (cf, of) = dis.fwd(d, fake)
-              dis.bwd(d, fake, cf, Array(of(0) - (1.0 - cfg.realLabel)), cfg.lrD, update = true)
-            }
-            // --- generator step through the frozen discriminator, target 1
-            // (one G step per two D samples, like the reference's 2:1
-            // dis:gen data ratio, java :412-421 vs :463-466)
-            for (_ <- 0 until (batch.length + 1) / 2) {
-              val z = Array.fill(cfg.zDim)(rng.nextDouble() * 2 - 1)
-              val (cg, fake) = gen.fwd(g, z)
-              val (cd, o) = dis.fwd(d, fake)
-              val dx = dis.bwd(d, fake, cd, Array(o(0) - 1.0), 0.0, update = false)
-              // chain through the generator's sigmoid output
-              val dOutG = new Array[Double](cfg.dataDim)
-              var i = 0
-              while (i < cfg.dataDim) {
-                dOutG(i) = dx(i) * fake(i) * (1.0 - fake(i))
-                i += 1
-              }
-              gen.bwd(g, z, cg, dOutG, cfg.lrG, update = true)
-            }
-            batches += 1
-          }
-          // weight the local params by batches processed
-          var i = 0
-          while (i < d.length) { d(i) *= batches; i += 1 }
-          i = 0
-          while (i < g.length) { g(i) *= batches; i += 1 }
-          Iterator((d, g, batches))
-        }
-      }.treeAggregate((new Array[Double](dis.nParams), new Array[Double](gen.nParams), 0L))(
-        seqOp = { case ((ad, ag, an), (d, g, nb)) => add(ad, d); add(ag, g); (ad, ag, an + nb) },
-        combOp = { case ((ad, ag, an), (bd, bg, bn)) => add(ad, bd); add(ag, bg); (ad, ag, an + bn) },
-        depth = 2)
-      if (n > 0) {
-        dP = sumD.map(_ / n)
-        gP = sumG.map(_ / n)
+    var p = Seq(dis.init(cfg.seed), gen.init(cfg.seed + 1))
+    for (round <- 0 until cfg.rounds)
+      p = averagingRound(rdd, p) { case (pid, it, Seq(d, g)) =>
+        localRound(it, pid, round, span, cfg)(adversarialStep(dis, gen, d, g, _, _, cfg))
       }
-      bcD.destroy(); bcG.destroy()
-    }
-    Model(cfg, dP, gP)
-  }
-
-  private def add(a: Array[Double], b: Array[Double]): Unit = {
-    var i = 0
-    while (i < a.length) { a(i) += b(i); i += 1 }
+    Model(cfg, p(0), p(1))
   }
 
   /** Per-batch GAN + classifier CO-TRAINING — the reference's loop trains
@@ -255,7 +243,7 @@ object Gan {
     * after the GAN converges. Input rows are (vec_id, x, label); per
     * batch each partition runs the adversarial dis/gen steps and then a
     * softmax-head SGD step on the CURRENT discriminator's features; all
-    * three parameter vectors are averaged in one treeAggregate.
+    * three parameter vectors are averaged in one [[averagingRound]].
     * Returns the GAN model plus the trained head (a linear-softmax layer
     * over the dis features, like the reference's dense+softmax head,
     * :337-364). The (x, label) rows stay cached through the last round,
@@ -271,101 +259,24 @@ object Gan {
 
   private def coTrainRounds(rdd: RDD[(Array[Double], Int)], nClasses: Int,
       cfg: Config, lrHead: Double): (Model, Array[Double]) = {
-    val sc = rdd.sparkContext
     val dis = mkDis(cfg)
     val gen = mkGen(cfg)
     val nFeat = {
       val probe = new Array[Double](cfg.dataDim)
       dis.features(dis.init(cfg.seed), probe).length
     }
-    var dP = dis.init(cfg.seed)
-    var gP = gen.init(cfg.seed + 1)
-    var hP = new Array[Double](nFeat * nClasses + nClasses) // zero-init softmax head
     val span = estBatchesPerPart(rdd.count(), rdd.getNumPartitions, cfg.batchSize)
-
-    for (round <- 0 until cfg.rounds) {
-      val bcD = sc.broadcast(dP)
-      val bcG = sc.broadcast(gP)
-      val bcH = sc.broadcast(hP)
-      val (sumD, sumG, sumH, n) = rdd.mapPartitionsWithIndex { (pid, it) =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          val d = bcD.value.clone()
-          val g = bcG.value.clone()
-          val h = bcH.value.clone()
-          val rng = new java.util.Random(cfg.seed + round * 7919L + pid * 131L)
-          var batches = 0L
-          // rotating local-step window, same treatment as train
-          roundBatchPicker(it.grouped(cfg.batchSize), round, span,
-            cfg.maxBatchesPerRound).foreach { batch =>
-            // adversarial steps (same as train)
-            batch.foreach { case (x, _) =>
-              val (cd, o) = dis.fwd(d, x)
-              dis.bwd(d, x, cd, Array(o(0) - cfg.realLabel), cfg.lrD, update = true)
-              val z = Array.fill(cfg.zDim)(rng.nextDouble() * 2 - 1)
-              val fake = gen.fwd(g, z)._2
-              val (cf, of) = dis.fwd(d, fake)
-              dis.bwd(d, fake, cf, Array(of(0) - (1.0 - cfg.realLabel)), cfg.lrD, update = true)
-            }
-            for (_ <- 0 until (batch.length + 1) / 2) {
-              val z = Array.fill(cfg.zDim)(rng.nextDouble() * 2 - 1)
-              val (cg, fake) = gen.fwd(g, z)
-              val (cd, o) = dis.fwd(d, fake)
-              val dx = dis.bwd(d, fake, cd, Array(o(0) - 1.0), 0.0, update = false)
-              val dOutG = new Array[Double](cfg.dataDim)
-              var i = 0
-              while (i < cfg.dataDim) { dOutG(i) = dx(i) * fake(i) * (1.0 - fake(i)); i += 1 }
-              gen.bwd(g, z, cg, dOutG, cfg.lrG, update = true)
-            }
-            // classifier step on the CURRENT dis features (co-training)
-            batch.foreach { case (x, label) =>
-              val f = dis.features(d, x)
-              val logits = new Array[Double](nClasses)
-              var k = 0
-              while (k < nClasses) {
-                var a = h(nFeat * nClasses + k)
-                var i = 0
-                while (i < nFeat) { a += f(i) * h(i * nClasses + k); i += 1 }
-                logits(k) = a
-                k += 1
-              }
-              val mx = logits.max
-              var zsum = 0.0
-              k = 0
-              while (k < nClasses) { logits(k) = math.exp(logits(k) - mx); zsum += logits(k); k += 1 }
-              k = 0
-              while (k < nClasses) {
-                val dOut = logits(k) / zsum - (if (k == label) 1.0 else 0.0)
-                h(nFeat * nClasses + k) -= lrHead * dOut
-                var i = 0
-                while (i < nFeat) { h(i * nClasses + k) -= lrHead * f(i) * dOut; i += 1 }
-                k += 1
-              }
-            }
-            batches += 1
-          }
-          var i = 0
-          while (i < d.length) { d(i) *= batches; i += 1 }
-          i = 0
-          while (i < g.length) { g(i) *= batches; i += 1 }
-          i = 0
-          while (i < h.length) { h(i) *= batches; i += 1 }
-          Iterator((d, g, h, batches))
+    var p = Seq(dis.init(cfg.seed), gen.init(cfg.seed + 1),
+      new Array[Double](nFeat * nClasses + nClasses)) // zero-init softmax head
+    for (round <- 0 until cfg.rounds)
+      p = averagingRound(rdd, p) { case (pid, it, Seq(d, g, h)) =>
+        localRound(it, pid, round, span, cfg) { (batch, rng) =>
+          adversarialStep(dis, gen, d, g, batch.map(_._1), rng, cfg)
+          // classifier step on the CURRENT dis features (co-training)
+          batch.foreach { case (x, label) => headStep(h, dis.features(d, x), label, nClasses, lrHead) }
         }
-      }.treeAggregate((new Array[Double](dis.nParams), new Array[Double](gen.nParams),
-        new Array[Double](nFeat * nClasses + nClasses), 0L))(
-        seqOp = { case ((ad, ag, ah, an), (d, g, h, nb)) =>
-          add(ad, d); add(ag, g); add(ah, h); (ad, ag, ah, an + nb) },
-        combOp = { case ((ad, ag, ah, an), (bd, bg, bh, bn)) =>
-          add(ad, bd); add(ag, bg); add(ah, bh); (ad, ag, ah, an + bn) },
-        depth = 2)
-      if (n > 0) {
-        dP = sumD.map(_ / n)
-        gP = sumG.map(_ / n)
-        hP = sumH.map(_ / n)
       }
-      bcD.destroy(); bcG.destroy(); bcH.destroy()
-    }
+    val Seq(dP, gP, hCo) = p
     // Head-polish rounds: the co-trained head chased a MOVING feature
     // space — every averaging round changed the discriminator under it,
     // so the averaged head lags the final features (the lag grows with
@@ -376,68 +287,68 @@ object Gan {
     // SGD with O(nParams·partitions) sync like every other round, and
     // NO local-step cap: the cap guards nonconvex feature divergence,
     // while the frozen-feature head objective is convex — averaging
-    // full-partition passes is safe and every row contributes.
-    for (round <- cfg.rounds until cfg.rounds + 2) {
-      val bcD = sc.broadcast(dP)
-      val bcH = sc.broadcast(hP)
-      val (sumH, n) = rdd.mapPartitionsWithIndex { (pid, it) =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          val d = bcD.value
-          val h = bcH.value.clone()
-          var batches = 0L
-          it.grouped(cfg.batchSize).foreach { batch =>
-            batch.foreach { case (x, label) =>
-              val f = dis.features(d, x)
-              val logits = new Array[Double](nClasses)
-              var k = 0
-              while (k < nClasses) {
-                var a = h(nFeat * nClasses + k)
-                var i = 0
-                while (i < nFeat) { a += f(i) * h(i * nClasses + k); i += 1 }
-                logits(k) = a
-                k += 1
-              }
-              val mx = logits.max
-              var zsum = 0.0
-              k = 0
-              while (k < nClasses) { logits(k) = math.exp(logits(k) - mx); zsum += logits(k); k += 1 }
-              k = 0
-              while (k < nClasses) {
-                val dOut = logits(k) / zsum - (if (k == label) 1.0 else 0.0)
-                h(nFeat * nClasses + k) -= lrHead * dOut
-                var i = 0
-                while (i < nFeat) { h(i * nClasses + k) -= lrHead * f(i) * dOut; i += 1 }
-                k += 1
-              }
-            }
-            batches += 1
-          }
-          var i = 0
-          while (i < h.length) { h(i) *= batches; i += 1 }
-          Iterator((h, batches))
+    // full-partition passes is safe and every row contributes. Only the
+    // head is averaged (averaging an unchanged vector is not bit-exact);
+    // the frozen `dP` rides in the task closure.
+    var hP = Seq(hCo)
+    for (_ <- 0 until 2)
+      hP = averagingRound(rdd, hP) { case (_, it, Seq(h)) =>
+        var batches = 0L
+        it.grouped(cfg.batchSize).foreach { batch =>
+          batch.foreach { case (x, label) => headStep(h, dis.features(dP, x), label, nClasses, lrHead) }
+          batches += 1
         }
-      }.treeAggregate((new Array[Double](nFeat * nClasses + nClasses), 0L))(
-        seqOp = { case ((ah, an), (h, nb)) => add(ah, h); (ah, an + nb) },
-        combOp = { case ((ah, an), (bh, bn)) => add(ah, bh); (ah, an + bn) },
-        depth = 2)
-      if (n > 0) hP = sumH.map(_ / n)
-      bcD.destroy(); bcH.destroy()
-    }
-    (Model(cfg, dP, gP), hP)
+        batches
+      }
+    (Model(cfg, dP, gP), hP.head)
   }
 
-  /** Softmax-head prediction over a feature vector. */
-  def headPredict(hP: Array[Double], f: Array[Double], nClasses: Int): Int = {
+  /** The softmax head's logits over feature vector `f`: the head is
+    * `nFeat × nClasses` weights (feature-major) then `nClasses` biases.
+    */
+  private def headLogits(h: Array[Double], f: Array[Double], nClasses: Int): Array[Double] = {
     val nFeat = f.length
+    val logits = new Array[Double](nClasses)
+    var k = 0
+    while (k < nClasses) {
+      var a = h(nFeat * nClasses + k)
+      var i = 0
+      while (i < nFeat) { a += f(i) * h(i * nClasses + k); i += 1 }
+      logits(k) = a
+      k += 1
+    }
+    logits
+  }
+
+  /** One softmax-cross-entropy SGD step of the head, in place on `h`. */
+  private def headStep(h: Array[Double], f: Array[Double], label: Int, nClasses: Int,
+      lr: Double): Unit = {
+    val nFeat = f.length
+    val logits = headLogits(h, f, nClasses)
+    val mx = logits.max
+    var zsum = 0.0
+    var k = 0
+    while (k < nClasses) { logits(k) = math.exp(logits(k) - mx); zsum += logits(k); k += 1 }
+    k = 0
+    while (k < nClasses) {
+      val dOut = logits(k) / zsum - (if (k == label) 1.0 else 0.0)
+      h(nFeat * nClasses + k) -= lr * dOut
+      var i = 0
+      while (i < nFeat) { h(i * nClasses + k) -= lr * f(i) * dOut; i += 1 }
+      k += 1
+    }
+  }
+
+  /** Softmax-head prediction over a feature vector: the first class whose
+    * logit beats −∞ and every earlier logit (0 if none does).
+    */
+  def headPredict(hP: Array[Double], f: Array[Double], nClasses: Int): Int = {
+    val logits = headLogits(hP, f, nClasses)
     var best = 0
     var bestV = Double.NegativeInfinity
     var k = 0
     while (k < nClasses) {
-      var a = hP(nFeat * nClasses + k)
-      var i = 0
-      while (i < nFeat) { a += f(i) * hP(i * nClasses + k); i += 1 }
-      if (a > bestV) { bestV = a; best = k }
+      if (logits(k) > bestV) { bestV = logits(k); best = k }
       k += 1
     }
     best

@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.feature.PCA
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
@@ -27,12 +28,18 @@ object GanQueries {
 
   // q29 — distributed param-averaged GAN training; output the
   // discriminator's learned representation per row [java :337-364 uses
-  // these features for transfer learning]. The feature vector is emitted
-  // as a scalar digest (dim, rounded sum, rounded L2 norm) so the
-  // driver's rows-only check can sort the frame — raw array columns are
-  // not pandas-sortable.
+  // these features for transfer learning] via `featureDigest`.
   val q29: QueryDef = QueryDef.rowsOnly("q29_gan_train_features") { (s, d) =>
-    val (model, data) = Gan.trainOnEmbeddings(s, d)
+    featureDigest(s, d, Gan.Config())
+  }
+
+  /** Per row of the scaled embeddings: the trained discriminator's
+    * feature vector as a scalar digest (dim, rounded sum, rounded L2
+    * norm) plus its score, so the driver's rows-only check can sort the
+    * frame — raw array columns are not pandas-sortable.
+    */
+  private def featureDigest(s: SparkSession, d: String, cfg: Gan.Config): DataFrame = {
+    val (model, data) = Gan.trainOnEmbeddings(s, d, cfg)
     val bc = s.sparkContext.broadcast(model)
     import s.implicits._
     data.rdd.map { r =>
@@ -122,23 +129,9 @@ object GanQueries {
   // q36 — the reference's CONVOLUTIONAL GAN family (conv→pool→dense
   // discriminator, dense→upsample→conv generator, java :118-221) trained
   // with the same parameter-averaging loop on the 8×8 embedding grid;
-  // digest output like q29.
+  // the same `featureDigest` output as q29.
   val q36: QueryDef = QueryDef.rowsOnly("q36_conv_gan_features") { (s, d) =>
-    val (model, data) = Gan.trainOnEmbeddings(s, d, Gan.Config(arch = "conv"))
-    val bc = s.sparkContext.broadcast(model)
-    import s.implicits._
-    data.rdd.map { r =>
-      val id = r.getLong(0)
-      val x = r.getSeq[Double](1).toArray
-      val f = bc.value.disFeatures(x)
-      val sum = f.sum
-      val norm = math.sqrt(f.map(v => v * v).sum)
-      (id, f.length,
-        math.rint(sum * 1e6) / 1e6,
-        math.rint(norm * 1e6) / 1e6,
-        bc.value.disScore(x))
-    }.toDF("vec_id", "n_features", "feat_sum", "feat_norm", "d_score")
-      .orderBy("vec_id")
+    featureDigest(s, d, Gan.Config(arch = "conv"))
   }
 
   // q37 — per-batch GAN/classifier CO-TRAINING [java :408-511 trains dis,

@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.ml.{Estimator, Model, Transformer}
 import org.apache.spark.ml.param.{Param, ParamMap, Params}
 import org.apache.spark.ml.util.Identifiable
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -44,7 +45,21 @@ class ArrayMinMaxScaler(override val uid: String)
     val rdd = ds.select(col($(inputCol)).cast("array<double>")).rdd
       .map(_.getSeq[Double](0).toArray)
     val dim = rdd.first().length
-    val (mins, maxs) = rdd.treeAggregate(
+    val (mins, maxs) = ArrayMinMaxScaler.minMax(rdd, dim)
+    copyValues(new ArrayMinMaxScalerModel(uid, mins, maxs).setParent(this))
+  }
+
+  override def transformSchema(schema: StructType): StructType = withArrayOut(schema)
+  override def copy(extra: ParamMap): ArrayMinMaxScaler = defaultCopy(extra)
+}
+
+object ArrayMinMaxScaler {
+  /** Elementwise (min, max) of `dim`-wide rows in one depth-2
+    * treeAggregate: the fit of [[ArrayMinMaxScaler]] and of
+    * [[Gan.scaled01]].
+    */
+  private[ml] def minMax(rows: RDD[Array[Double]], dim: Int): (Array[Double], Array[Double]) =
+    rows.treeAggregate(
       (Array.fill(dim)(Double.MaxValue), Array.fill(dim)(Double.MinValue)))(
       seqOp = { case ((mn, mx), v) =>
         var i = 0
@@ -64,11 +79,6 @@ class ArrayMinMaxScaler(override val uid: String)
         }
         (mn1, mx1)
       }, depth = 2)
-    copyValues(new ArrayMinMaxScalerModel(uid, mins, maxs).setParent(this))
-  }
-
-  override def transformSchema(schema: StructType): StructType = withArrayOut(schema)
-  override def copy(extra: ParamMap): ArrayMinMaxScaler = defaultCopy(extra)
 }
 
 class ArrayMinMaxScalerModel(override val uid: String,
@@ -94,9 +104,11 @@ class ArrayMinMaxScalerModel(override val uid: String,
 }
 
 /** Distributed param-averaged GAN feature extractor as an Estimator: fit
-  * runs the adversarial loop (broadcast params down, treeAggregate average
-  * up — communication independent of row count), the model maps rows
-  * through the frozen discriminator's hidden layer.
+  * runs the adversarial loop (broadcast params down, batch-weighted copies
+  * up and summed on the driver in partition order, so the fit is
+  * bit-stable at any partition count; communication independent of row
+  * count), the model maps rows through the frozen discriminator's hidden
+  * layer.
   */
 class GanFeatureEstimator(override val uid: String)
     extends Estimator[GanFeatureModel] with ArrayColParams {

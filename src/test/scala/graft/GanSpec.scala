@@ -1,6 +1,12 @@
 package graft
 
+import java.nio.ByteBuffer
+import java.security.MessageDigest
+import java.util.concurrent.atomic.AtomicInteger
 import graft.ml.Gan
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 
 class GanSpec extends SparkSpec {
 
@@ -59,5 +65,81 @@ class GanSpec extends SparkSpec {
     val rows = scaled.collect().map(_.getSeq[Double](1))
     assert(rows.nonEmpty)
     assert(rows.forall(_.forall(v => v >= 0.0 && v <= 1.0)))
+  }
+
+  /** First 8 bytes of SHA-256 over the big-endian raw bits of the params. */
+  private def digest(params: Array[Double]*): String = {
+    val bb = ByteBuffer.allocate(params.map(_.length).sum * 8)
+    params.foreach(_.foreach(v => bb.putLong(java.lang.Double.doubleToRawLongBits(v))))
+    MessageDigest.getInstance("SHA-256").digest(bb.array()).take(8)
+      .map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  private def scaled = Gan.scaled01(Tables.embeddings(spark, sfDir), 64)
+  private def labeled(x: DataFrame) =
+    x.join(Tables.embeddings(spark, sfDir).select("vec_id", "label"), "vec_id")
+
+  // (sf fixture, arch) -> (train digest, co-train digest), default Config,
+  // recorded with the per-trainer treeAggregate averaging that the shared
+  // averaging round replaced: single-partition results must not move
+  private val golden = Map(
+    ("sf0.001", "mlp") -> ("ee09f2fb9ae92c75", "6d84486e2c810181"),
+    ("sf0.001", "conv") -> ("f81bacf2e48dc8ee", "6521915fab6a8ed1"),
+    ("sf0.01", "mlp") -> ("f1d655ad4bd31980", "b8b891af8e775878"),
+    ("sf0.01", "conv") -> ("72504571b2a77897", "60040dec07ace0ca"),
+    ("sf0.1", "mlp") -> ("cb905348bc32f4e9", "f07ef7050cb52ff6"),
+    ("sf0.1", "conv") -> ("5b7e6da826439fe7", "f65b1d209ce79a21"))
+
+  for (arch <- Seq("mlp", "conv")) test(s"$arch train and co-train match the golden digests") {
+    val want = golden.get((new java.io.File(sfDir).getName, arch))
+    assume(want.isDefined, s"no golden digests for $sfDir")
+    val x = scaled
+    assert(x.rdd.getNumPartitions == 1, "goldens are single-partition runs")
+    val cfg = Gan.Config(arch = arch)
+    val m = Gan.train(x, cfg)
+    val (cm, head) = Gan.trainCoTrained(labeled(x), nClasses = 10, cfg)
+    assert((digest(m.dParams, m.gParams), digest(cm.dParams, cm.gParams, head)) == want.get)
+  }
+
+  test("averages are bit-stable on a 4-partition frame") {
+    val x = scaled.repartition(4).cache()
+    val lx = labeled(x).cache()
+    try {
+      assert(x.rdd.mapPartitions(it => Iterator(it.size)).collect().count(_ > 0) == 4)
+      for (arch <- Seq("mlp", "conv")) {
+        val cfg = Gan.Config(arch = arch)
+        val (a, b) = (Gan.train(x, cfg), Gan.train(x, cfg))
+        assert(digest(a.dParams, a.gParams) == digest(b.dParams, b.gParams), s"$arch train")
+        val (ca, ha) = Gan.trainCoTrained(lx, nClasses = 10, cfg)
+        val (cb, hb) = Gan.trainCoTrained(lx, nClasses = 10, cfg)
+        assert(digest(ca.dParams, ca.gParams, ha) == digest(cb.dParams, cb.gParams, hb),
+          s"$arch co-train")
+      }
+    } finally { lx.unpersist(); x.unpersist() }
+  }
+
+  test("one job per averaging round, after the input-cache job") {
+    val x = scaled.cache()
+    val lx = labeled(x).cache()
+    lx.count()
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      ListenerDrain.drain(sc)
+      jobs.set(0)
+      body
+      ListenerDrain.drain(sc)
+      jobs.get
+    }
+    sc.addSparkListener(l)
+    try {
+      val cfg = Gan.Config(rounds = 3)
+      assert(jobsOf(Gan.train(x, cfg)) == 1 + cfg.rounds)
+      // the co-training rounds plus two head-polish rounds
+      assert(jobsOf(Gan.trainCoTrained(lx, nClasses = 10, cfg)) == 1 + cfg.rounds + 2)
+    } finally { sc.removeSparkListener(l); lx.unpersist(); x.unpersist() }
   }
 }
