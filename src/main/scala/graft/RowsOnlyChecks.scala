@@ -382,7 +382,7 @@ object RowsOnlyChecks {
       "cluster sizes positive and partition the corpus",
       (s, d, df) => {
         val tot = df.agg(sum("n")).head.getLong(0)
-        val n = Tables.embeddingsCount(s, d)
+        val n = Regime.embeddings(s, d)
         val badN = df.filter(col("n") < 1).count()
         fail(tot == n, s"cluster sizes sum to $tot != corpus $n") ++
           fail(badN == 0, s"$badN empty clusters")
@@ -391,7 +391,7 @@ object RowsOnlyChecks {
     "q35_tsne_project" -> Check("OperatorSemanticsSpec",
       "finite nontrivial 2-d layout with one row per vector",
       (s, d, df) => {
-        val n = Tables.embeddingsCount(s, d)
+        val n = Regime.embeddings(s, d)
         val rows = df.count()
         val badVal = df.filter(col("y1").isNull || col("y2").isNull ||
           col("y1").isNaN || col("y2").isNaN).count()
@@ -576,7 +576,7 @@ object RowsOnlyChecks {
 
   private def ganFeatureChecks(s: SparkSession, d: String,
       df: DataFrame): Seq[String] = {
-    val n = Tables.embeddingsCount(s, d)
+    val n = Regime.embeddings(s, d)
     val rows = df.count()
     val nf = df.select("n_features").distinct().collect().map(_.getInt(0)).toSet
     val badNorm = df.filter(col("feat_norm") < 0).count()

@@ -15,8 +15,10 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.parquet(path(dir, name))
 
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")
@@ -67,52 +69,6 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** Memoized `embeddings` row count per (session, corpus dir) — one
-    * metadata-cheap action shared by every consumer that sizes a
-    * structure from n (the blocking quantizer's √n cell count, q52's
-    * grid-chunk count). At cluster scale this is the value a catalog
-    * statistic would provide; the memo is the local stand-in.
-    */
-  private val embCountMemo = new Memo[(SparkSession, String), Long]("tables.embeddingsCount")
-  def embeddingsCount(s: SparkSession, d: String): Long =
-    embCountMemo((s, d))(embeddings(s, d).count())
-
-  /** Memoized `documents` row count — same catalog-statistic stand-in as
-    * [[embeddingsCount]], shared by the corpus-size gates that pick a
-    * plan (q204's factored path) or a storage level (the shingle dict)
-    * by corpus regime.
-    */
-  private val docCountMemo = new Memo[(SparkSession, String), Long]("tables.documentsCount")
-  def documentsCount(s: SparkSession, d: String): Long =
-    docCountMemo((s, d))(documents(s, d).count())
-
-  /** Scan-width fan-out for LONG per-row CPU kernels over an unsplit
-    * input (guide §2.5's unsplittable-input rule: "repartition
-    * immediately after the read"). Fires only when BOTH
-    *   (a) `rows >= gateRows` — the serial kernel would run long enough
-    *       that one round-robin exchange of skinny rows is noise against
-    *       it (measured at sf0.1: fanning out ~0.5 s kernels multiplied
-    *       total task time ~20× in per-task overhead + GC churn and made
-    *       wall WORSE — small kernels must stay fused with the scan), and
-    *   (b) the frame's scan yields fewer splits than the cluster's
-    *       parallelism (at 100 TB the file set out-splits the cluster, so
-    *       this is the identity — no corpus exchange is ever added where
-    *       data already fans out; the r13 measurement that rejected
-    *       unconditional post-scan repartitions).
-    * Callers pass `rows` from a memoized catalog-statistic count
-    * ([[embeddingsCount]]/[[documentsCount]]).
-    *
-    * Only order-free consumers may use this (integer/exact aggregates,
-    * bounded top-k aggregates, per-row math): repartitioning reorders
-    * rows, which would perturb last-ulp sums in cross-row double
-    * aggregates.
-    */
-  def fanOutWide(df: DataFrame, rows: Long, gateRows: Long = 65536L): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (rows >= gateRows && df.rdd.getNumPartitions < p) df.repartition(p)
-    else df
-  }
 }
 
 /** One session-lifetime memo cache (a cached signature DataFrame, a

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Regime, Tables}
 import graft.functions.VectorExprs
 
 /** Deduplication operators for LLM training-data pipelines.
@@ -149,29 +149,6 @@ object Dedup {
           .as("id_b"),
         col("mult"))
       .filter(col("id_a") < col("id_b"))
-
-  /** Corpus-size gate for the band AND-amplification: above this many
-    * documents, [[candidateIdPairs]] callers that rerank with an
-    * EXPENSIVE per-pair kernel (q109's threshold Levenshtein) require a
-    * candidate to collide in BOTH MinHash bands — statistically one band
-    * of width 16 (P = J¹⁶ instead of 1−(1−J⁸)²), a ~1500× cut on the
-    * J ≈ 0.4 candidate mass that dominates a big corpus's funnel while
-    * keeping ≥72% of J ≥ 0.98 near-dup pairs — WITHOUT touching the
-    * signature table (same 16 perms, same buckets; only the pair gate
-    * widens). The threshold sits between sf1 (~60k docs, gate off — the
-    * driver-checked scales keep the r11-pinned single-band funnel) and
-    * sf10 (~600k docs, gate on). Oracles on gated queries mirror the
-    * rule with a CASE on count(documents).
-    */
-  private[graft] val WideBandGateDocs: Long = 100000L
-
-  /** Corpus-size gate for the EXACT prefix AND-amplification (q204/q217)
-    * — overridable only through the `graft.pf.gate.docs` system property,
-    * which the forced-gate equality specs set to drive the big-corpus path
-    * on the sf0.001 fixture.
-    */
-  private[graft] def pfGateDocs: Long =
-    sys.props.get("graft.pf.gate.docs").map(_.toLong).getOrElse(WideBandGateDocs)
 
   /** Extension width `s` for the exact prefix AND-amplification gate.
     *
@@ -514,11 +491,11 @@ object Dedup {
   }
 
   /** q44's candidate blocking: a deterministic seed-vector IVF quantizer.
-    * `nCells(n)` seed vectors (lowest vec_ids) define the cells; every
+    * `Centroids.kForCount(n)` seed vectors (lowest vec_ids) define the cells; every
     * vector multi-assigns to its `MAssign` nearest cells by cosine, and
     * candidate pairs must share a cell. The cell count SCALES WITH THE
     * CORPUS — k = max(16, ⌈√n⌉) — up to the
-    * [[graft.ml.Centroids.QuantizerGateRows]] gate, so per-cell
+    * [[graft.Regime.QuantizerGateRows]] gate, so per-cell
     * population grows like √n and candidate volume is O(n^1.5·m²) across
     * the oracle-checked scale factors; ABOVE the gate the codebook
     * freezes to q33's trained centroids (see [[seedVectors]]) so the
@@ -529,16 +506,13 @@ object Dedup {
     * factors is asserted in OperatorSemanticsSpec, and the frozen tier's
     * recall/quota semantics in FixedCodebookSpec.
     */
-  private[graft] def nCells(s: org.apache.spark.sql.SparkSession, d: String): Int =
-    graft.ml.Centroids.kForCount(Tables.embeddingsCount(s, d),
-      graft.ml.Centroids.QuantizerGateRows)
   private val MAssign = 4
 
   /** DuckDB replay of [[seedVectors]]: the max(16, ⌈√n⌉) lowest-vec_id
     * rows with their norms — shared by the q44 and q58 oracles. The
     * window-function form (not LIMIT) keeps the seed count a pure SQL
     * expression of the corpus itself. Valid for corpora at or below the
-    * [[graft.ml.Centroids.QuantizerGateRows]] gate — every
+    * [[graft.Regime.QuantizerGateRows]] gate — every
     * oracle-checked SF (max: sf1 = 20k vectors); above it the engine
     * assigns against the trained frozen codebook, which no SQL replay
     * can express (FixedCodebookSpec covers that tier instead).
@@ -577,8 +551,8 @@ object Dedup {
 
   /** The blocking quantizer's codebook, GATED on corpus size (the
     * 100-TB lever shared with [[graft.ml.Centroids]]): at or below
-    * [[graft.ml.Centroids.QuantizerGateRows]] vectors the codebook is
-    * the `nCells(n)` lowest-vec_id seed rows — a pure function of the
+    * [[graft.Regime.QuantizerGateRows]] vectors the codebook is
+    * the `kForCount(n)` lowest-vec_id seed rows — a pure function of the
     * data the DuckDB oracle replays exactly, so every hash-checked scale
     * factor covers the real plan; ABOVE the gate it is q33's TRAINED
     * KMeans codebook (constant k = FixedK, fit on a bounded stride
@@ -593,12 +567,12 @@ object Dedup {
     */
   private[graft] def seedVectors(s: org.apache.spark.sql.SparkSession,
       d: String): Array[(Long, Array[Double])] =
-    quantizerCodebook(s, d, graft.ml.Centroids.QuantizerGateRows)
+    quantizerCodebook(s, d, Regime.QuantizerGateRows)
 
   private[graft] def quantizerCodebook(s: org.apache.spark.sql.SparkSession,
       d: String, gateRows: Long): Array[(Long, Array[Double])] = {
-    val n = Tables.embeddingsCount(s, d)
-    if (n <= gateRows) {
+    val n = Regime.embeddings(s, d)
+    if (!Regime.frozenCodebook(n, gateRows)) {
       val k = graft.ml.Centroids.kForCount(n, gateRows)
       Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
         .orderBy("vec_id").limit(k).take(k)
@@ -668,8 +642,8 @@ object Dedup {
     * key width.
     */
   private[graft] def subSplitBits(n: Long,
-      gateRows: Long = graft.ml.Centroids.QuantizerGateRows): Int =
-    if (n <= gateRows) 0
+      gateRows: Long = Regime.QuantizerGateRows): Int =
+    if (!Regime.frozenCodebook(n, gateRows)) 0
     else math.min(12, math.max(1, math.ceil(
       math.log(n.toDouble * MAssign /
         (graft.ml.Centroids.FixedK.toDouble * TargetBlockPop)) / math.log(2.0)).toInt))
@@ -700,7 +674,7 @@ object Dedup {
   private[graft] def embeddingCandidatePairs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     pairsFromCells(seedCellAssignments(s, d),
-      subSplitBits(Tables.embeddingsCount(s, d)))
+      subSplitBits(Regime.embeddings(s, d)))
 
   /** Cell-blocked candidate pairs from any assignment table carrying
     * (vec_id, embedding, cell) — shared by the catalog path above and
@@ -1213,7 +1187,7 @@ object Dedup {
       |    FROM banded a JOIN banded b
       |      ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
       |    GROUP BY 1, 2)
-      |  WHERE nb >= CASE WHEN (SELECT count(*) FROM documents) > 100000
+      |  WHERE nb >= CASE WHEN (SELECT count(*) FROM documents) > ${Regime.WideBandGateDocs}
       |    THEN 2 ELSE 1 END)
       |SELECT c.id_a, c.id_b,
       |  CAST(levenshtein(da.text, db.text) AS INTEGER) AS edit_dist
@@ -1223,14 +1197,7 @@ object Dedup {
       |ORDER BY edit_dist, id_a, id_b
       |LIMIT 50""".stripMargin) { (s, d) =>
     val docs = Tables.documents(s, d)
-    // the AND-amplification gate (see WideBandGateDocs): the per-pair
-    // kernel here is the banded-DP Levenshtein — the most expensive
-    // rerank in the funnel family — so past the gate the candidate set
-    // itself shrinks (both bands must agree), not just its distribution.
-    // nDocs off the cached signature table: rows = docs × bands exactly.
-    val nDocs = bandedCached(s, d).count() / (MinhashPerms / BandSize)
-    candidateIdPairs(s, d,
-      minBands = if (nDocs > WideBandGateDocs) 2 else 1)
+    q109Candidates(s, d)
       .join(docs.select(col("doc_id").as("id_a"), col("text").as("text_a")), "id_a")
       .join(docs.select(col("doc_id").as("id_b"), col("text").as("text_b")), "id_b")
       // both pruning steps are semantically free against the ≤40 gate:
@@ -1245,6 +1212,17 @@ object Dedup {
       .orderBy(asc("edit_dist"), asc("id_a"), asc("id_b"))
       .limit(50)
   }
+
+  /** q109's candidate pairs behind the AND-amplification gate
+    * ([[graft.Regime.WideBandGateDocs]]): the per-pair kernel there is
+    * the banded-DP Levenshtein — the most expensive rerank in the funnel
+    * family — so past the gate the candidate set itself shrinks (both
+    * bands must agree), not just its distribution. `gateDocs` is exposed
+    * for the forced-gate spec.
+    */
+  private[graft] def q109Candidates(s: SparkSession, d: String,
+      gateDocs: Long = Regime.WideBandGateDocs): DataFrame =
+    candidateIdPairs(s, d, minBands = if (Regime.andGated(s, d, gateDocs)) 2 else 1)
 
   // q115 — the CURATION FUNNEL end to end: quality gate → exact dedup
   // (keep-first per content hash) → decontamination (any shared
@@ -2049,7 +2027,7 @@ object Dedup {
       // dimension table read from executor-local disk, not a pinned
       // executor-memory structure.
       val level =
-        if (Tables.documentsCount(s, d) > pfGateDocs)
+        if (Regime.andGated(s, d))
           org.apache.spark.storage.StorageLevel.DISK_ONLY
         else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       Dict.rankIds(shingleVocabDf(s, d).orderBy("df", "token"), "tid")
@@ -2065,7 +2043,8 @@ object Dedup {
     shingleDict(s, d).filter(col("df") === 1).count()
 
   private[graft] def prefixFilterJoin(s: SparkSession, d: String,
-      tau: Double, takeN: Int): DataFrame = {
+      tau: Double, takeN: Int,
+      gateDocs: Long = Regime.WideBandGateDocs): DataFrame = {
     val tok = Tables.documents(s, d)
       .select(col("doc_id"),
         explode(array_distinct(
@@ -2073,18 +2052,19 @@ object Dedup {
     val dict = shingleDict(s, d)
     // ONE doc_id re-group of 8-byte ids: sorted-asc tid == (df, token)
     // prefix order == the verify set's total order; checkpointed so the
-    // three consuming branches read one materialization (see note above)
+    // three consuming branches read one materialization (see note above);
+    // the checkpoint is eager, one job, before the branches fan out
     val docs = tok.join(dict.select("token", "tid"), "token")
       .groupBy("doc_id")
       .agg(sort_array(collect_list(col("tid"))).as("toks"),
         count(lit(1)).as("n"))
       .withColumn("plen", (col("n") - ceil(lit(tau) * col("n")) + 1).cast("int"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     // Past the corpus-size gate, single-token prefix collision is the
     // measured scale-killer (352.6M candidates vs 225k true pairs in ONE
     // sf10 block) — switch to the factored + AND-amplified plan; the
     // driver-checked scales keep this pinned plan byte-for-byte.
-    if (docs.count() > pfGateDocs) {
+    if (Regime.andGated(s, d, gateDocs)) {
       return prefixFilterJoinFactored(s, docs, shingleSingles(s, d), tau, takeN)
     }
     // prefix = first plen ids of the sorted array
@@ -2128,8 +2108,8 @@ object Dedup {
     out
   }
 
-  /** q204's big-corpus plan (past [[pfGateDocs]]) — EXACT, same output as
-    * the pinned small-corpus plan (forced-gate spec proves equality with
+  /** q204's big-corpus plan (past [[graft.Regime.WideBandGateDocs]]) —
+    * EXACT, same output as the pinned small-corpus plan (forced-gate spec proves equality with
     * the brute-force join), built from three lossless reductions (the
     * third, r13's top-k threshold raise, is inlined below — it certifies
     * a cut line from the same-core pairs and reruns the prefix machinery
@@ -2345,23 +2325,21 @@ object Dedup {
     * reuses the same index (longer thresholds need shorter prefixes —
     * monotone, so the stored prefix is a superset).
     */
-  // private[graft]: the forced-gate spec clears it to rebuild the index
-  // under the big-corpus rule (writeBucketed overwrites, so that is safe)
-  private[graft] val pfMemo =
-    new graft.Memo[(SparkSession, String), (String, String, String, Boolean)]("dedup.prefixIndex")
-  private[graft] def prefixIndexTables(s: SparkSession,
-      d: String): (String, String, String, Boolean) =
-    pfMemo((s, d)) {
-      val suffix = graft.Memos.pathToken(d)
+  // keyed on the gate decision: a forced (gated) snapshot lives in its
+  // own tables and memo entry beside the pinned one
+  private val pfMemo =
+    new graft.Memo[(SparkSession, String, Boolean), (String, String, String)]("dedup.prefixIndex")
+  private def prefixIndexTables(s: SparkSession,
+      d: String, gated: Boolean): (String, String, String) =
+    pfMemo((s, d, gated)) {
+      val suffix = graft.Memos.pathToken(d) + (if (gated) "_g" else "")
       val (dfT, prefT, docsT) = (s"graft_pf_df_$suffix",
         s"graft_pf_prefix_$suffix", s"graft_pf_docs_$suffix")
       val corpus = Tables.documents(s, d).filter(col("doc_id") % 10 =!= 0)
       // past the corpus-size gate the snapshot stores EXTENDED prefixes
       // (n − max(0, ⌊⌈τn⌉/2⌋ − s) — see PrefixGateExt) so refresh
       // candidate joins can demand the provable minimum shared-token
-      // count instead of a single collision; the gate decision is frozen
-      // with the snapshot (the refresh reads it back from the memo)
-      val gated = corpus.count() > pfGateDocs
+      // count instead of a single collision
       val tok = corpus.select(col("doc_id"),
         explode(array_distinct(
           graft.functions.VectorExprs.charNgrams(col("text"), 20))).as("token"))
@@ -2402,7 +2380,7 @@ object Dedup {
           .agg(sort_array(collect_set(col("doc_id"))).as("cids")),
         prefT, "tid", 8)
       docsArt.unpersist(false)
-      (dfT, prefT, docsT, gated)
+      (dfT, prefT, docsT)
     }
 
   /** q217's body with the threshold and limit exposed (the spec replays
@@ -2413,8 +2391,10 @@ object Dedup {
     * work per refresh, the corpus never re-shuffles (plan-guarded).
     */
   private[graft] def incrementalPrefixJoin(s: SparkSession, d: String,
-      tau: Double, takeN: Int): DataFrame = {
-    val (dfT, prefT, docsT, gated) = prefixIndexTables(s, d)
+      tau: Double, takeN: Int,
+      gateDocs: Long = Regime.WideBandGateDocs): DataFrame = {
+    val gated = Regime.andGated(s, d, gateDocs)
+    val (dfT, prefT, docsT) = prefixIndexTables(s, d, gated)
     val batchTok = Tables.documents(s, d).filter(col("doc_id") % 10 === 0)
       .select(col("doc_id"),
         explode(array_distinct(

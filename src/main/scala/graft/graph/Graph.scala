@@ -30,11 +30,19 @@ object Graph {
     "graph.symKnnEdges", _.unpersist(false))
   def symKnnEdgesCached(s: SparkSession, d: String, k: Int): DataFrame =
     symEdgesMemo((s, d, k)) {
-      val fwd = graft.sim.Similarity.approxKnnGraphCached(s, d, k)
-        .select(col("id_a").as("src"), col("id_b").as("dst"))
-      fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().repartition(col("dst")).cache()
+      symmetric(graft.sim.Similarity.approxKnnGraphCached(s, d, k))
+        .repartition(col("dst")).cache()
     }
+
+  /** The symmetric `(src, dst)` adjacency of an undirected (`id_a`,
+    * `id_b`) edge list: both orientations, deduplicated. The loop
+    * operators take it as their edge list and join it every round, so
+    * callers without the [[symKnnEdgesCached]] memo materialize it.
+    */
+  def symmetric(edges: DataFrame): DataFrame = {
+    val fwd = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
+    fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+  }
 
   /** Distributed PageRank over a directed edge list (`src`, `dst`
     * columns). Rank convention sums to N (teleport term `1 − d` per
@@ -192,8 +200,9 @@ object Graph {
       .limit(20)
   }
 
-  /** Synchronous semi-supervised LABEL PROPAGATION over an undirected
-    * edge list: every non-seed node takes, each round, the majority label
+  /** Synchronous semi-supervised LABEL PROPAGATION over a symmetric
+    * `(src, dst)` edge list ([[symmetric]] or [[symKnnEdgesCached]]):
+    * every non-seed node takes, each round, the majority label
     * among its currently-labeled neighbors (ties → count desc then
     * smallest label; seeds stay clamped). Each round is one join of the
     * O(n·k) edge list against the label table + one counted groupBy + one
@@ -208,20 +217,11 @@ object Graph {
     * state; n_support is the winning vote count from the round the label
     * was last assigned.
     */
-  def labelPropagation(edges0: DataFrame, seeds: DataFrame, nIter: Int,
-      symEdges: Option[DataFrame] = None): DataFrame = {
+  def labelPropagation(edges: DataFrame, seeds: DataFrame, nIter: Int): DataFrame = {
     // The per-vote argmax is an order-free min(struct(-n, label))
     // aggregate instead of a row_number window: identical winner (max
     // count, smallest label on ties), but it aggregates partially
     // map-side and needs no per-round sort (r13).
-    // symEdges: caller-provided pre-symmetrized cached adjacency (the
-    // [[symKnnEdgesCached]] memo) — skips the per-invocation union +
-    // distinct shuffle; the inline derivation stays for generic callers.
-    val edges = symEdges.getOrElse {
-      val fwd = edges0.select(col("id_a").as("src"), col("id_b").as("dst"))
-      fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().localCheckpoint(false)
-    }
     var state = seeds
       .select(col("vec_id"), col("label"), col("is_seed"),
         lit(null).cast("long").as("n_support"))
@@ -261,22 +261,21 @@ object Graph {
   // geometry, so accuracy-vs-truth is ~chance here by construction —
   // the spec validates mechanism, not this corpus's label signal.)
   val q135: QueryDef = QueryDef.rowsOnly("q135_label_propagation") { (s, d) =>
-    val edges = graft.sim.Similarity.approxKnnGraphCached(s, d, 3)
     val seeds = graft.Tables.embeddings(s, d)
       .select(col("vec_id"),
         when(col("vec_id") % 5 === 0, col("label")).as("label"),
         (col("vec_id") % 5 === 0).as("is_seed"))
-    labelPropagation(edges, seeds, nIter = 4,
-      symEdges = Some(symKnnEdgesCached(s, d, 3)))
+    labelPropagation(symKnnEdgesCached(s, d, 3), seeds, nIter = 4)
       .filter(!col("is_seed") && col("label").isNotNull)
       .select(col("vec_id"), col("label").as("pred_label"), col("n_support"))
       .orderBy("vec_id")
   }
 
-  /** Level-synchronous multi-source BFS over an undirected edge list
-    * (`id_a`, `id_b`): every seed starts at depth 0, each round the
-    * current frontier's unvisited neighbors get depth+1. Returns the
-    * final (id, depth) table for all REACHED nodes. Each round is one
+  /** Level-synchronous multi-source BFS over a symmetric `(src, dst)`
+    * edge list ([[symmetric]] or [[symKnnEdgesCached]]): every seed
+    * starts at depth 0, each round the current frontier's unvisited
+    * neighbors get depth+1. Returns the final (id, depth) table for all
+    * REACHED nodes. Each round is one
     * keyed join of the frontier against the edge list + a distinct +
     * an anti-join against the visited set — all keyed shuffles over
     * O(frontier·k) rows, no driver-side reads beyond the one-count
@@ -285,13 +284,7 @@ object Graph {
     * WHOLE level, so rounds = graph diameter, not node count — the
     * level-synchronous shape that scales.
     */
-  def bfsLayers(edges0: DataFrame, seeds: DataFrame, maxDepth: Int,
-      symEdges: Option[DataFrame] = None): DataFrame = {
-    val edges = symEdges.getOrElse {
-      val fwd = edges0.select(col("id_a").as("src"), col("id_b").as("dst"))
-      fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().localCheckpoint(false)
-    }
+  def bfsLayers(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
     var visited = seeds.select(col("id"), lit(0L).as("depth"))
       .localCheckpoint(false)
     var frontier = visited
@@ -324,12 +317,10 @@ object Graph {
   // GraphSpec replays the BFS densely on the driver, exact
   // layer-for-layer.
   val q187: QueryDef = QueryDef.rowsOnly("q187_bfs_layers") { (s, d) =>
-    val edges = graft.sim.Similarity.approxKnnGraphCached(s, d, 3)
     val seeds = graft.Tables.embeddings(s, d)
       .filter(col("vec_id") % 250 === 0)
       .select(col("vec_id").as("id"))
-    val reached = bfsLayers(edges, seeds, maxDepth = 20,
-      symEdges = Some(symKnnEdgesCached(s, d, 3)))
+    val reached = bfsLayers(symKnnEdgesCached(s, d, 3), seeds, maxDepth = 20)
     val all = graft.Tables.embeddings(s, d).select(col("vec_id").as("id"))
     val withDepth = all
       .join(reached.select(col("id").as("rid"), col("depth")),
@@ -393,7 +384,7 @@ object Graph {
   // (dedup/coreset opportunity, q44/q140's hunting ground); a kNN graph
   // near the random-graph floor says the space is spread thin. The edge
   // list comes from the GATED kNN supplier (exact top-3 at or below
-  // Similarity.ExactKnnMaxRows vectors, seed-IVF cell-blocked above it
+  // Regime.ExactKnnMaxRows vectors, seed-IVF cell-blocked above it
   // — the sf1 fix for the measured 18× wall growth of the ungated
   // exact join); DuckDB replays the whole chain (gate → graph build →
   // census) hash-exactly at EVERY scale, because the blocked branch's
@@ -511,16 +502,12 @@ object Graph {
     * edge list against the O(n) estimate table + a per-node window over
     * ≤ deg rows (degree-bounded, never corpus-wide); convergence probes
     * the changed-node count every 2nd round (pageRankConverged's
-    * cadence); lineage truncates per round. Returns (states, rounds).
+    * cadence); lineage truncates per round. `edges` is the symmetric
+    * `(src, dst)` list ([[symmetric]] or [[symKnnEdgesCached]]). Returns
+    * (states, rounds).
     */
-  def coreness(edges0: DataFrame, maxIter: Int = 40,
-      symEdges: Option[DataFrame] = None): (DataFrame, Int) = {
+  def coreness(edges: DataFrame, maxIter: Int = 40): (DataFrame, Int) = {
     import org.apache.spark.sql.expressions.Window
-    val edges = symEdges.getOrElse {
-      val fwd = edges0.select(col("id_a").as("src"), col("id_b").as("dst"))
-      fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().localCheckpoint(false)
-    }
     var state = edges.groupBy(col("src").as("id"))
       .agg(count(lit(1)).cast("long").as("c"))
       .localCheckpoint(false)
@@ -564,8 +551,7 @@ object Graph {
   // matches every node's core number, plus the k-core INVARIANT (every
   // node in the induced max-core subgraph keeps ≥ k_max neighbors).
   val q236: QueryDef = QueryDef.rowsOnly("q236_kcore") { (s, d) =>
-    val edges = graft.sim.Similarity.approxKnnGraphCached(s, d, 3)
-    coreness(edges, symEdges = Some(symKnnEdgesCached(s, d, 3)))._1
+    coreness(symKnnEdgesCached(s, d, 3))._1
       .groupBy("c").agg(count(lit(1)).as("n_nodes"))
       .select(col("c").as("coreness"), col("n_nodes"))
       .orderBy(desc("coreness"))

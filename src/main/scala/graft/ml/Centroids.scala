@@ -4,7 +4,7 @@ import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Regime, Tables}
 import graft.functions.VectorExprs
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -34,36 +34,16 @@ object Centroids {
   /** Floor on the cell count (sf0.001-sized corpora). */
   val MinK = 16
 
-  /** FIXED-CODEBOOK GATE (the 100-TB lever for the whole quantizer
-    * family): below this corpus size the cell count follows the
-    * max(16, ⌈√n⌉) rule and the KMeans fit reads the full corpus; ABOVE
-    * it the codebook FREEZES — k stops at [[FixedK]] = ⌈√gate⌉ (the two
-    * rules meet exactly at the gate, so k(n) is continuous) and the fit
-    * reads a deterministic ≤gate-row stride sample. Per-row assignment
-    * cost then stays O(k·d) = constant instead of O(√n·d), turning the
-    * family's n^1.5 assignment work linear; training cost is bounded by
-    * the sample regardless of n. Every oracle-checked scale factor
-    * (sf0.01 = 500 … sf1 = 20,000 vectors) sits BELOW the gate, so the
-    * DuckDB-replayable √n tier is what the hash checks cover; the frozen
-    * tier (sf10 = 200,000 up) is spec-covered with a forced gate
-    * (FixedCodebookSpec) — q52's ExactKnnMaxRows discipline applied to
-    * the quantizer itself.
-    */
-  val QuantizerGateRows = 65536L
-
-  /** Frozen-tier cell count: ⌈√[[QuantizerGateRows]]⌉. */
+  /** Frozen-tier cell count: ⌈√[[graft.Regime.QuantizerGateRows]]⌉. */
   val FixedK = 256
 
   /** Coarse-quantizer cell count — max(16, ⌈√n⌉) capped at [[FixedK]]
-    * above the [[QuantizerGateRows]] gate: per-cell population grows
-    * like √n up to the gate (sub-quadratic cell-blocked pair volume),
+    * above the [[graft.Regime.QuantizerGateRows]] gate: per-cell
+    * population grows like √n up to the gate (sub-quadratic cell-blocked pair volume),
     * then the codebook freezes so assignment cost turns linear.
     * Consumers read the count off the fitted model's centroid matrix,
     * so nothing else hard-codes it.
     */
-  def k(s: SparkSession, dir: String): Int =
-    kForCount(graft.Tables.embeddingsCount(s, dir), QuantizerGateRows)
-
   private[graft] def kForCount(n: Long, gateRows: Long): Int =
     math.max(MinK,
       math.ceil(math.sqrt(math.min(n, gateRows).toDouble)).toInt)
@@ -78,23 +58,24 @@ object Centroids {
   private val memo = new graft.Memo[(SparkSession, String, Long), KMeansModel]("ml.kmeans")
 
   def model(s: SparkSession, dir: String): KMeansModel =
-    modelFor(s, dir, QuantizerGateRows)
+    modelFor(s, dir, Regime.QuantizerGateRows)
 
   /** [[model]] with the gate exposed — FixedCodebookSpec forces a tiny
     * gate to exercise the frozen tier at fixture scale; the catalog
-    * always calls through [[model]] with the production gate.
+    * always calls through [[model]] with the production gate. The memo
+    * keys on the gate, so a forced fit is never served to the catalog.
     */
   private[graft] def modelFor(s: SparkSession, dir: String,
       gateRows: Long): KMeansModel =
     memo((s, dir, gateRows)) {
-      val n = Tables.embeddingsCount(s, dir)
+      val n = Regime.embeddings(s, dir)
       val base = Tables.embeddings(s, dir)
       // Frozen tier: fit on a deterministic stride sample of ≤ gateRows
       // vectors — training cost is bounded by the sample no matter how
       // large the corpus, and the sample is a pure function of the data
       // (vec_id mod stride), so the codebook is reproducible without any
       // stored state.
-      val src = (if (n > gateRows) {
+      val src = (if (Regime.frozenCodebook(n, gateRows)) {
         val stride = (n + gateRows - 1) / gateRows
         base.filter(pmod(col("vec_id"), lit(stride)) === 0)
       } else base).withColumn("fvec", unitVec)

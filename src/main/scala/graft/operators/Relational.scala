@@ -5139,7 +5139,7 @@ object Relational {
       max(when(col("arm") === 0, col("p90"))).as("p90_a"),
       max(when(col("arm") === 1, col("p90"))).as("p90_b"))
     val grid = s.range(0, 4).select(
-      (element_at(typedLit(Seq(25L, 50L, 75L, 90L)), col("id").cast("int") + 1))
+      (element_at(typedLit(Seq(25, 50, 75, 90)), col("id").cast("int") + 1))
         .as("quantile"))
     val joined = grid.crossJoin(broadcast(p))
     // row-wise dispatch on the `quantile` column — one expression serves

@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Regime, Tables}
 import graft.functions.VectorExprs
 
 /** Similarity search over the `embeddings` vector column (Array[Float],
@@ -113,16 +113,6 @@ object Similarity {
       .limit(5)
   }
 
-  /** Corpus-size gate for the EXACT kNN tier (q52 and its graph
-    * consumers q141/q148/q189): at or below this row count the exact
-    * all-pairs grid join runs (O(n²) pairs — affordable, and exactly the
-    * single-broadcast-chunk regime since it equals [[MaxBuildRows]]);
-    * above it [[knnEdges]] swaps in the cell-blocked tier. The sf1
-    * checkpoint measured the ungated exact tier at 17–21× wall growth on
-    * 10× data — O(n²) by definition; the gate is the implemented fix.
-    */
-  private[graft] final val ExactKnnMaxRows = 4096L
-
   /** The blocked (approx-tier) kNN edge list with q52's exact output
     * contract (id_a, rn, id_b, cos_sim): candidate pairs form only
     * inside shared seed-IVF cells ([[graft.dedup.Dedup.seedCellAssignments]]
@@ -168,21 +158,21 @@ object Similarity {
 
   /** Gated kNN edge supplier (id_a, rn, id_b, cos_sim): exact
     * [[q52TopKAgg]] at or below `maxExactRows` vectors, cell-blocked
-    * [[blockedKnnEdges]] above it. The corpus count is the memoized
-    * catalog statistic (no extra action). Exact-tier results are NOT
+    * [[blockedKnnEdges]] above it ([[graft.Regime.exactKnn]], from the
+    * parquet footers — no extra action). Exact-tier results are NOT
     * memoized — small-SF plans and bench numbers are unchanged by the
     * gate; the blocked tier caches its O(n·k) edge table.
     */
   def knnEdges(s: SparkSession, d: String, k: Int,
-      maxExactRows: Long = ExactKnnMaxRows): DataFrame =
-    if (Tables.embeddingsCount(s, d) <= maxExactRows) q52TopKAgg(s, d, k = k)
+      maxExactRows: Long = Regime.ExactKnnMaxRows): DataFrame =
+    if (Regime.exactKnn(s, d, maxExactRows)) q52TopKAgg(s, d, k = k)
     else knnEdgesMemo((s, d, k))(blockedKnnEdges(s, d, k).cache())
 
   /** DuckDB replay of [[knnEdges]]: a CTE chain ending in
     * `knn(id_a, rn, id_b, cos_sim)` with BOTH tiers behind the same
     * `count(*)` gate — the exact branch's input empties above
-    * [[ExactKnnMaxRows]] (the filter sits inside the CTE, so the O(n²)
-    * join never forms) and the blocked branch's input empties at or
+    * [[graft.Regime.ExactKnnMaxRows]] (the filter sits inside the CTE, so
+    * the O(n²) join never forms) and the blocked branch's input empties at or
     * below it. Only one branch is ever non-empty; one shared rank
     * window orders the union. The blocked branch replays q44's proven
     * seed→score→cells→candidates chain (feasible in DuckDB at the sf1
@@ -196,14 +186,14 @@ object Similarity {
       |  SELECT vec_id, embedding,
       |    sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
       |  FROM embeddings),
-      |vex AS (SELECT * FROM v WHERE (SELECT n FROM nn) <= $ExactKnnMaxRows),
+      |vex AS (SELECT * FROM v WHERE (SELECT n FROM nn) <= ${Regime.ExactKnnMaxRows}),
       |exact_pairs AS (
       |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
       |    round(list_sum(list_transform(range(1, 65),
       |        i -> CAST(a.embedding[CAST(i AS INT)] AS DOUBLE) * CAST(b.embedding[CAST(i AS INT)] AS DOUBLE)))
       |      / (a.nrm * b.nrm), 8) AS cos_sim
       |  FROM vex a JOIN vex b ON a.vec_id <> b.vec_id),
-      |vbl AS (SELECT * FROM v WHERE (SELECT n FROM nn) > $ExactKnnMaxRows),
+      |vbl AS (SELECT * FROM v WHERE (SELECT n FROM nn) > ${Regime.ExactKnnMaxRows}),
       |seedsb AS (
       |  SELECT vec_id AS cell, embedding AS semb, nrm AS snrm
       |  FROM (SELECT vec_id, embedding, nrm,
@@ -367,12 +357,10 @@ object Similarity {
     val v = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
       sqrt(VectorExprs.dotProduct(col("embedding"), col("embedding"))).as("nrm"))
       .repartition(s.sparkContext.defaultParallelism)
-    // the MEMOIZED corpus count sizes the grid (one action per (session,
-    // dir), not per invocation — at cluster scale this is a catalog
-    // statistic); n ≤ maxBuildRows keeps the original single-broadcast
-    // plan
+    // the footer row count sizes the grid (no action); n ≤ maxBuildRows
+    // keeps the original single-broadcast plan
     val nChunks = math.max(1,
-      math.ceil(Tables.embeddingsCount(s, d).toDouble / maxBuildRows).toInt)
+      math.ceil(Regime.embeddings(s, d).toDouble / maxBuildRows).toInt)
     val pairs = (0 until nChunks).map { g =>
       val chunk = v.filter(pmod(xxhash64(col("vec_id")), lit(nChunks)) === g)
       v.as("a")
@@ -647,7 +635,7 @@ object Similarity {
     // spec-pinned; vec_id < 2^40), so ties break exactly as before.
     // fanOutWide: the quadratic per-row kernel (cellArgmax + cosine per
     // probed pair) must not run serial on an unsplit scan — past the
-    // 65536-row gate the corpus round-robins once; identity at 100 TB
+    // fan-out gate the corpus round-robins once; identity at 100 TB
     // (splits > cores) and at bench SFs (2000 rows — measured: fanning
     // out sub-second kernels is a wall regression).
     val topk = org.apache.spark.sql.GraftBridge.column(
@@ -655,7 +643,7 @@ object Similarity {
         org.apache.spark.sql.GraftBridge.expression(col("c")),
         org.apache.spark.sql.GraftBridge.expression(col("pid")),
         k).toAggregateExpression())
-    Tables.fanOutWide(Tables.embeddings(s, d), Tables.embeddingsCount(s, d))
+    Regime.fanOutWide(Tables.embeddings(s, d), Regime.embeddings(s, d))
       .withColumn("cell_id", VectorExprs.cellArgmax(col("embedding"), cents))
       .join(broadcast(probes), "cell_id")
       .select(col("qid"),
@@ -711,8 +699,7 @@ object Similarity {
         org.apache.spark.sql.GraftBridge.expression(col("c")),
         org.apache.spark.sql.GraftBridge.expression(col("vec_id")),
         10).toAggregateExpression())
-    val exact = Tables.fanOutWide(Tables.embeddings(s, d),
-        Tables.embeddingsCount(s, d))
+    val exact = Regime.fanOutWide(Tables.embeddings(s, d), Regime.embeddings(s, d))
       .crossJoin(broadcast(queries))
       .select(col("qid"), col("vec_id"),
         VectorExprs.cosineSim(col("embedding"), col("qvec")).as("c"))
@@ -805,7 +792,7 @@ object Similarity {
     * budget smaller.
     */
   private[graft] def adcBudget(s: SparkSession, d: String): Int =
-    math.min(10000L, math.max(100L, Tables.embeddingsCount(s, d) / 10L)).toInt
+    math.min(10000L, math.max(100L, Regime.embeddings(s, d) / 10L)).toInt
 
   /** q54's body with the query vector exposed: full-scan ADC
     * corpus-proportional funnel + exact rerank to top-`k`.
@@ -2008,7 +1995,7 @@ object Similarity {
         col("label").as("qlabel"))
     val byCos = Window.partitionBy("qid").orderBy(desc("cos"), asc("node"))
     val funnel = math.min(200L,
-      math.max(15L, 15L * Tables.embeddingsCount(s, d) / 5000L)).toInt
+      math.max(15L, 15L * Regime.embeddings(s, d) / 5000L)).toInt
     nswBatchSearch(s, d, queries.select("qid", "qvec"), funnel,
       beam = math.max(96, 2 * funnel), expand = 24, maxHops = 8)
       .join(emb.select(col("vec_id").as("node"), col("label")), "node")

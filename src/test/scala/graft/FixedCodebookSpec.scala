@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** The fixed-codebook quantizer gate (r12): above
-  * `Centroids.QuantizerGateRows` vectors the blocking/IVF quantizer
+  * `Regime.QuantizerGateRows` vectors the blocking/IVF quantizer
   * freezes — cell count stops at FixedK and the codebook comes from a
   * bounded-sample KMeans fit — so per-row assignment cost turns linear
   * (n·k) instead of the √n-seed family's n·√n. Every oracle-checked SF
@@ -41,6 +41,7 @@ class FixedCodebookSpec extends SparkSpec {
 
   test("kForCount: √n rule below the gate, frozen FixedK above, continuous at the gate") {
     import graft.ml.Centroids._
+    import graft.Regime.QuantizerGateRows
     assert(kForCount(500L, QuantizerGateRows) == 23)
     assert(kForCount(2000L, QuantizerGateRows) == 45)
     // sf1 (20k vectors) is below the gate — the oracle-checked tiers are
@@ -59,7 +60,7 @@ class FixedCodebookSpec extends SparkSpec {
     assert(seeds.map(_._1).toSeq == lowest,
       "below the gate the codebook must be the lowest-vec_id data rows (oracle-replayable)")
     val frozen = dedup.Dedup.quantizerCodebook(spark, sfDir, ForcedGate)
-    val n = Tables.embeddingsCount(spark, sfDir)
+    val n = Regime.embeddings(spark, sfDir)
     assert(frozen.map(_._1).toSeq == (0L until frozen.length.toLong),
       "frozen-tier cell ids must be the centroid indices")
     assert(frozen.length == graft.ml.Centroids.kForCount(n, ForcedGate))
@@ -97,7 +98,7 @@ class FixedCodebookSpec extends SparkSpec {
   }
 
   test("residual sub-split: gated off below the gate, bounded bits above, near-dup recall survives forced bits") {
-    import graft.ml.Centroids.QuantizerGateRows
+    import graft.Regime.QuantizerGateRows
     // below the gate the sub-split NEVER activates (bits = 0 → sub ≡ 0 →
     // pairsFromCells is bit-identical to the unsplit join)
     assert(dedup.Dedup.subSplitBits(500L) == 0)

@@ -288,8 +288,8 @@ class GraphSpec extends SparkSpec {
     val expectHist = core.values.groupBy(identity).view
       .mapValues(_.size.toLong).toMap
 
-    val (state, rounds) = graph.Graph.coreness(
-      sim.Similarity.approxKnnGraphCached(spark, sfDir, 3))
+    val (state, rounds) = graph.Graph.coreness(graph.Graph.symmetric(
+      sim.Similarity.approxKnnGraphCached(spark, sfDir, 3)).localCheckpoint())
     val gotNodes = state.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(gotNodes.size == core.size)
     core.foreach { case (v, c) =>

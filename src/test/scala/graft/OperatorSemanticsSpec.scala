@@ -682,7 +682,7 @@ class OperatorSemanticsSpec extends SparkSpec {
     // test corpora whose row counts actually differ.
     val dirs = Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
     val Seq((n1, c1), (n2, c2)) = dirs.map { d =>
-      (Tables.embeddingsCount(spark, d).toDouble,
+      (Regime.embeddings(spark, d).toDouble,
         dedup.Dedup.embeddingCandidatePairs(spark, d).count().toDouble)
     }
     val exponent = math.log(c2 / c1) / math.log(n2 / n1)

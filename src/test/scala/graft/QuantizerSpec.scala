@@ -115,10 +115,10 @@ class QuantizerSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("coarse model and PQ codebooks equal a sequential auto-solver reference fit") {
     val base = Tables.embeddings(spark, sfDir)
-    val n = Tables.embeddingsCount(spark, sfDir)
-    assert(n <= Centroids.QuantizerGateRows, "fixture must sit in the sqrt(n) tier")
+    val n = Regime.embeddings(spark, sfDir)
+    assert(n <= Regime.QuantizerGateRows, "fixture must sit in the sqrt(n) tier")
     val refCenters = new KMeans()
-      .setK(Centroids.kForCount(n, Centroids.QuantizerGateRows))
+      .setK(Centroids.kForCount(n, Regime.QuantizerGateRows))
       .setSeed(666L).setMaxIter(10).setFeaturesCol("fvec")
       .fit(base.withColumn("fvec", array_to_vector(lambdaUnit(col("embedding")))))
       .clusterCenters.map(_.toArray.toSeq).toSeq

@@ -37,31 +37,29 @@ class R10OperatorsSpec extends SparkSpec {
   }
 
   test("q204 factored+gated big-corpus plan equals brute force under a forced gate") {
-    // forces the past-pfGateDocs plan (df=1 factoring + identical-core
+    // forces the past-the-gate plan (df=1 factoring + identical-core
     // collapse + the extended-prefix AND gate) onto the spec fixture and
     // proves it is LOSSLESS — pair-for-pair equal to the brute-force
     // O(n²) join, i.e. the same bar the pinned small-corpus plan passes
     val tau = 0.5
-    System.setProperty("graft.pf.gate.docs", "0")
-    try {
-      val docs = Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("text")).collect()
-        .map(r => r.getLong(0) -> gramSet(r.getString(1)))
-        .filter(_._2.nonEmpty).toMap
-      val brute = (for {
-        (a, sa) <- docs; (b, sb) <- docs if a < b
-        inter = (sa & sb).size
-        j = inter.toDouble / (sa.size + sb.size - inter)
-        if BigDecimal(j).setScale(8, BigDecimal.RoundingMode.HALF_EVEN) >= tau
-      } yield (a, b, inter.toLong)).toSet
-      val got = dedup.Dedup.prefixFilterJoin(spark, sfDir, tau, takeN = 1 << 20)
-        .collect()
-        .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
-          r.getAs[Long]("inter"))).toSet
-      assert(got == brute,
-        s"missed=${(brute -- got).take(5)} extra=${(got -- brute).take(5)}")
-      assert(brute.nonEmpty, "fixture must contain qualifying pairs")
-    } finally System.clearProperty("graft.pf.gate.docs")
+    val docs = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("text")).collect()
+      .map(r => r.getLong(0) -> gramSet(r.getString(1)))
+      .filter(_._2.nonEmpty).toMap
+    val brute = (for {
+      (a, sa) <- docs; (b, sb) <- docs if a < b
+      inter = (sa & sb).size
+      j = inter.toDouble / (sa.size + sb.size - inter)
+      if BigDecimal(j).setScale(8, BigDecimal.RoundingMode.HALF_EVEN) >= tau
+    } yield (a, b, inter.toLong)).toSet
+    val got = dedup.Dedup.prefixFilterJoin(spark, sfDir, tau, takeN = 1 << 20,
+        gateDocs = 0L)
+      .collect()
+      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
+        r.getAs[Long]("inter"))).toSet
+    assert(got == brute,
+      s"missed=${(brute -- got).take(5)} extra=${(got -- brute).take(5)}")
+    assert(brute.nonEmpty, "fixture must contain qualifying pairs")
   }
 
   test("q204 factored plan's top-k threshold raise is exact (planted witnesses)") {

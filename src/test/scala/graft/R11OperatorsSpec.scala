@@ -38,7 +38,7 @@ class R11OperatorsSpec extends SparkSpec {
   }
 
   test("q217 gated refresh (forced) == ungated refresh == fresh-df rebuild") {
-    // forces the past-pfGateDocs snapshot rule (extended prefixes + the
+    // forces the past-the-gate snapshot rule (extended prefixes + the
     // per-pair AND gate on shared-token counts) and proves the refresh
     // output is unchanged — the gate is a theorem, not a recall knob
     val tau = 0.5
@@ -48,19 +48,11 @@ class R11OperatorsSpec extends SparkSpec {
         r.getAs[Double]("jaccard"))).toSet
     val ungated = rows(dedup.Dedup.incrementalPrefixJoin(spark, sfDir, tau,
       takeN = 1 << 20))
-    dedup.Dedup.pfMemo.clear()
-    System.setProperty("graft.pf.gate.docs", "0")
-    try {
-      val gated = rows(dedup.Dedup.incrementalPrefixJoin(spark, sfDir, tau,
-        takeN = 1 << 20))
-      assert(gated == ungated,
-        s"missed=${(ungated -- gated).take(5)} extra=${(gated -- ungated).take(5)}")
-      assert(gated.nonEmpty, "fixture must contain batch-involved pairs")
-    } finally {
-      System.clearProperty("graft.pf.gate.docs")
-      // rebuild the ungated snapshot so later tests see the pinned rule
-      dedup.Dedup.pfMemo.clear()
-    }
+    val gated = rows(dedup.Dedup.incrementalPrefixJoin(spark, sfDir, tau,
+      takeN = 1 << 20, gateDocs = 0L))
+    assert(gated == ungated,
+      s"missed=${(ungated -- gated).take(5)} extra=${(gated -- ungated).take(5)}")
+    assert(gated.nonEmpty, "fixture must contain batch-involved pairs")
   }
 
   test("q217 plan: corpus index tables are read in place, never under a refresh exchange") {
