@@ -71,7 +71,7 @@ object ScaleUp {
   def run(spark: SparkSession, inDir: String, outDir: String, factor: Int): Unit = {
     new java.io.File(outDir).mkdirs()
 
-    def read(t: String): DataFrame = spark.read.parquet(s"$inDir/$t.parquet")
+    def read(t: String): DataFrame = Tables.load(spark, inDir, t)
 
     /** Replicate with per-replica column transforms, preserving column
       * order. `keyCols` get + rep·Off; `extra` rewrites specific columns

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
 /** Parquet table loaders for the TPC-H-ish test schema.
@@ -9,6 +10,14 @@ import scala.jdk.CollectionConverters._
   * (Java/src/main/java/org/deeplearning4j/dl4jGANComputerVision.java:372-400
   * reads CSV matrices), re-expressed as Spark parquet scans so filters and
   * projections push down to the columnar reader.
+  *
+  * Input tables are immutable within a session: [[load]] infers a table's
+  * schema (one Spark job) on its first call per (session, path) and hands
+  * the memoized schema to every later read, which then runs no job. Reads
+  * of files the program writes itself stay on plain `spark.read`, because
+  * those files change within a session: `TextAnalysis.shardManifest`,
+  * q163's zone-map audit, `SnapshotTable`'s snapshots and `ScaleUp`'s
+  * count of the table it has just written.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -17,8 +26,19 @@ object Tables {
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(path(dir, name))
+  private val schemaMemo = new Memo[(SparkSession, String), StructType]("tables.schema")
+
+  /** A fresh relation over `dir/name.parquet` (new attribute ids on every
+    * call, so two loads of one table self-join unambiguously). The first
+    * load in a session is the inferring read itself; later ones read with
+    * its memoized schema. A failed inference memoizes nothing.
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val p = path(dir, name)
+    var inferred: Option[DataFrame] = None
+    val schema = schemaMemo((spark, p)) { inferred = Some(spark.read.parquet(p)); inferred.get.schema }
+    inferred.getOrElse(spark.read.schema(schema).parquet(p))
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame     = load(s, d, "orders")

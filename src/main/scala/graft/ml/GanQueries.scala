@@ -134,16 +134,26 @@ object GanQueries {
     featureDigest(s, d, Gan.Config(arch = "conv"))
   }
 
+  /** q37's co-trained (model, head) and the labeled rows it trained on,
+    * cached: built once per (session, dir), like `Gan.trainOnEmbeddings`.
+    */
+  private[graft] val coTrainMemo =
+    new graft.Memo[(SparkSession, String), (Gan.Model, Array[Double], DataFrame)](
+      "ml.ganCoTrain", _._3.unpersist())
+
   // q37 — per-batch GAN/classifier CO-TRAINING [java :408-511 trains dis,
   // gan, and the CV model inside one batch loop]: the softmax head learns
   // on the evolving CONV discriminator's pooled features (the reference's
   // CV model is the CNN), parameter-averaged alongside both GAN nets.
   // Per-row predictions + correctness digest.
   val q37: QueryDef = QueryDef.rowsOnly("q37_cotrain_classify") { (s, d) =>
-    val scaled = Gan.scaled01(Tables.embeddings(s, d), 64)
-    val labeled = scaled
-      .join(Tables.embeddings(s, d).select(col("vec_id"), col("label")), "vec_id")
-    val (model, head) = Gan.trainCoTrained(labeled, nClasses = 10, Gan.Config(arch = "conv"))
+    val (model, head, labeled) = coTrainMemo((s, d)) {
+      val labeled = Gan.scaled01(Tables.embeddings(s, d), 64)
+        .join(Tables.embeddings(s, d).select(col("vec_id"), col("label")), "vec_id")
+        .cache()
+      val (model, head) = Gan.trainCoTrained(labeled, nClasses = 10, Gan.Config(arch = "conv"))
+      (model, head, labeled)
+    }
     val bcM = s.sparkContext.broadcast(model)
     val bcH = s.sparkContext.broadcast(head)
     import s.implicits._

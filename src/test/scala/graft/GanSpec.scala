@@ -2,10 +2,7 @@ package graft
 
 import java.nio.ByteBuffer
 import java.security.MessageDigest
-import java.util.concurrent.atomic.AtomicInteger
 import graft.ml.Gan
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 class GanSpec extends SparkSpec {
@@ -55,6 +52,7 @@ class GanSpec extends SparkSpec {
     assert(rows.nonEmpty)
     val acc = rows.map(_.getAs[Int]("correct")).sum.toDouble / rows.length
     assert(acc > 0.11, s"co-trained accuracy $acc not above the 10-class prior")
+    ml.GanQueries.coTrainMemo.clear() // retrain rather than read the memo
     val again = ml.GanQueries.q37.fn(spark, sfDir).collect()
     assert(rows.map(_.getAs[Int]("prediction")).toSeq ==
       again.map(_.getAs[Int]("prediction")).toSeq, "co-training not deterministic")
@@ -122,24 +120,11 @@ class GanSpec extends SparkSpec {
     val x = scaled.cache()
     val lx = labeled(x).cache()
     lx.count()
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    def jobsOf(body: => Unit): Int = {
-      ListenerDrain.drain(sc)
-      jobs.set(0)
-      body
-      ListenerDrain.drain(sc)
-      jobs.get
-    }
-    sc.addSparkListener(l)
     try {
       val cfg = Gan.Config(rounds = 3)
       assert(jobsOf(Gan.train(x, cfg)) == 1 + cfg.rounds)
       // the co-training rounds plus two head-polish rounds
       assert(jobsOf(Gan.trainCoTrained(lx, nClasses = 10, cfg)) == 1 + cfg.rounds + 2)
-    } finally { sc.removeSparkListener(l); lx.unpersist(); x.unpersist() }
+    } finally { lx.unpersist(); x.unpersist() }
   }
 }

@@ -1,11 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** The corpus-size regime: footer row counts equal `count()` without a
   * Spark job, each fixture's gate decisions are pinned, and q109's band
@@ -59,25 +56,12 @@ class RegimeSpec extends SparkSpec {
   }
 
   test("Regime.rows runs no Spark job") {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    def jobsOf(body: => Unit): Int = {
-      ListenerDrain.drain(sc)
-      jobs.set(0)
-      body
-      ListenerDrain.drain(sc)
-      jobs.get
-    }
-    sc.addSparkListener(l)
-    try withTables { d =>
+    withTables { d =>
       assert(jobsOf(Regime.rows(spark, d, "multi")) == 0)
       assert(jobsOf(Regime.rows(spark, d, "empty")) == 0)
       // the listener does see the count() a footer read replaces
       assert(jobsOf(Tables.load(spark, d, "multi").count()) > 0)
-    } finally sc.removeSparkListener(l)
+    }
   }
 
   test("each fixture's corpus sizes and gate decisions are pinned") {

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,6 +14,24 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   // (e.g. SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 sbt test)
   val sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+  /** Spark jobs started while `body` runs. The listener bus is drained
+    * before and after, so every job of `body`, and no earlier one, counts.
+    */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      ListenerDrain.drain(sc)
+      jobs.get
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {
