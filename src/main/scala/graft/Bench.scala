@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import scala.collection.mutable
+
 /** Steady-state benchmark over every catalog query.
   *
   * Protocol (designed so two back-to-back runs agree per-query, not just
@@ -28,9 +32,142 @@ package graft
   *     the raw list and `baseline_outliers_over_2x_stable`, the
   *     subset whose reps agree (low cv): the list that actually means
   *     "regression". Log-tail truncation of the stdout line cannot lose
-  *     queries from this file.
+  *     queries from this file. Its `records` hold each timed query's
+  *     [[Record]]: the cold pass (memo builds included) and the warm rep.
+  *
+  * Per-query dev run: `SPARK_GRAFT_BENCH_REPS=1 SPARK_GRAFT_BENCH_OUT=
+  * /tmp/p.json tools/run_main.sh graft.Bench <query>...`
   */
 object Bench {
+  /** One of a pass's slowest stages, named by its first `graft.` frame. */
+  final case class StageCost(site: String, wallMs: Long, taskMs: Long, tasks: Int)
+
+  /** One query pass: wall time, and the Spark cost (task time is
+    * executorRunTime) of everything run under its job group.
+    */
+  final case class Ledger(wallS: Double, jobs: Int, stages: Int, tasks: Long,
+      taskMs: Long, cpuMs: Long, gcMs: Long, stageWallMs: Long, top: Seq[StageCost])
+
+  /** A timed query: its cold pass, its reported (min) warm rep, and the
+    * storage resident and [[Memo]] entries added after the cold pass.
+    */
+  final case class Record(rows: Long, cold: Ledger, warm: Ledger,
+      residentBytes: Long, memos: Seq[(String, Int)])
+
+  /** Per-query times of passes 1..n (errored reps absent) and records. */
+  final case class Run(reps: Map[String, Vector[Double]], errors: Map[String, String],
+      storageHighWater: Long, records: Map[String, Record])
+
+  /** Memory held by cached RDD blocks right now. */
+  private def resident(spark: SparkSession): Long =
+    spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
+
+  /** Sums Spark cost per job group. A stage finds its group in the local
+    * properties it was submitted with, which AQE's stage threads capture
+    * and Centroids' pool threads inherit from the query's thread.
+    */
+  private final class Ledgers extends SparkListener {
+    private final class Acc {
+      var jobs, stages = 0
+      var tasks, taskMs, cpuMs, gcMs, wallMs = 0L
+      var top = Vector.empty[StageCost]
+    }
+    private val groupOf = mutable.Map[Int, String]()
+    private val accs = mutable.Map[String, Acc]()
+    // SparkContext.SPARK_JOB_GROUP_ID is package-private
+    private def group(p: java.util.Properties): String =
+      Option(p).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      accs.getOrElseUpdate(group(e.properties), new Acc).jobs += 1
+    }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
+      groupOf(e.stageInfo.stageId) = group(e.properties)
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      val i = e.stageInfo
+      groupOf.remove(i.stageId).foreach { g =>
+        val a = accs.getOrElseUpdate(g, new Acc)
+        val m = i.taskMetrics
+        val wall = (for (c <- i.completionTime; s <- i.submissionTime) yield c - s).getOrElse(0L)
+        // a broadcast build's stage name is an opaque future frame; the
+        // first graft.* frame of the call-site stack names the operator
+        val site = i.details.linesIterator
+          .find(l => l.contains("graft.") && !l.contains("graft.Bench"))
+          .map(_.trim.take(90)).getOrElse(i.name.take(70))
+        a.stages += 1; a.tasks += i.numTasks; a.taskMs += m.executorRunTime
+        a.cpuMs += m.executorCpuTime / 1000000; a.gcMs += m.jvmGCTime; a.wallMs += wall
+        a.top = (a.top :+ StageCost(site, wall, m.executorRunTime, i.numTasks))
+          .sortBy(-_.wallMs).take(5)
+      }
+    }
+    def ledger(g: String, wallS: Double): Ledger = synchronized {
+      val a = accs.getOrElse(g, new Acc)
+      Ledger(wallS, a.jobs, a.stages, a.tasks, a.taskMs, a.cpuMs, a.gcMs, a.wallMs, a.top)
+    }
+  }
+
+  /** Run `names`: pass 0 (cold), then `nReps` timed passes interleaved
+    * across queries, each under the job group `<query>#<pass>`.
+    */
+  def run(spark: SparkSession, sfDir: String, names: Seq[String], nReps: Int): Run = {
+    val sc = spark.sparkContext
+    val ledgers = new Ledgers
+    val reps = mutable.Map[String, Vector[Double]]().withDefaultValue(Vector.empty)
+    // a query that THROWS must not masquerade as a fast rep — record the
+    // failure so the artifact (and the 2x gate's reader) can see it
+    val errors = mutable.Map[String, String]()
+    // query -> (cold wall s, rows, resident bytes, memo entries added)
+    val cold = mutable.Map[String, (Double, Long, Long, Seq[(String, Int)])]()
+    var storageHighWater = 0L
+    sc.addSparkListener(ledgers)
+    try {
+      for (rep <- 0 to nReps; name <- names) {
+        val memosBefore = if (rep == 0) Memos.held.toMap else Map.empty[String, Int]
+        sc.setJobGroup(s"$name#$rep", name)
+        val t0 = System.nanoTime()
+        val rows =
+          try Some(SparkEntry.queries(name)(spark, sfDir).count())
+          catch { case e: Throwable => errors(name) = Report.error(e); None }
+          finally sc.clearJobGroup()
+        val dt = (System.nanoTime() - t0) / 1e9
+        // a rep that threw is time-to-exception, not a timing — recording it
+        // would turn a broken query into a phantom speedup (the r7 failure
+        // mode: 18 dead queries "ran" in 0.05s and the total looked best-ever)
+        if (rep > 0 && rows.nonEmpty) reps(name) = reps(name) :+ dt
+        val used = resident(spark)
+        storageHighWater = math.max(storageHighWater, used)
+        if (rep == 0) rows.foreach { n =>
+          val added = Memos.held.collect { case (m, k) if k > memosBefore.getOrElse(m, 0) =>
+            m -> (k - memosBefore.getOrElse(m, 0)) }
+          cold(name) = (dt, n, used, added)
+        }
+      }
+      GraftBridge.drainListeners(sc)
+    } finally sc.removeSparkListener(ledgers)
+    // errored queries get no record, as they get no timing
+    val records = cold.collect { case (n, (coldS, rows, used, memos))
+        if !errors.contains(n) && reps(n).nonEmpty =>
+      val r = reps(n)
+      val best = r.indexOf(r.min)
+      n -> Record(rows, ledgers.ledger(s"$n#0", coldS),
+        ledgers.ledger(s"$n#${best + 1}", r(best)), used, memos)
+    }
+    Run(reps.toMap, errors.toMap, storageHighWater, records.toMap)
+  }
+
+  private def ledgerJson(l: Ledger): String =
+    s"""{"wall_s":${l.wallS},"jobs":${l.jobs},"stages":${l.stages},"tasks":${l.tasks},""" +
+      s""""task_ms":${l.taskMs},"cpu_ms":${l.cpuMs},"gc_ms":${l.gcMs},""" +
+      s""""stage_wall_ms":${l.stageWallMs},"top_stages":""" +
+      l.top.map(t => s"""{"site":${Report.quote(t.site)},"wall_ms":${t.wallMs},""" +
+        s""""task_ms":${t.taskMs},"tasks":${t.tasks}}""").mkString("[", ",", "]}")
+
+  private[graft] def recordJson(r: Record): String =
+    s"""{"rows":${r.rows},"resident_bytes":${r.residentBytes},"memos":""" +
+      r.memos.sortBy(_._1).map { case (m, k) => s"${Report.quote(m)}:$k" }.mkString("{", ",", "}") +
+      s""","cold":${ledgerJson(r.cold)},"warm":${ledgerJson(r.warm)}}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Session.cpus
@@ -50,36 +187,10 @@ object Bench {
     // one-off SFs (the sf1 scale checkpoint) use 2 to keep wall-clock
     // sane; min-of-2 interleaved is still a defensible steady-state read.
     val nReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val reps = scala.collection.mutable.Map[String, Vector[Double]]()
-      .withDefaultValue(Vector.empty)
-    // a query that THROWS must not masquerade as a fast rep — record the
-    // failure so the artifact (and the 2x gate's reader) can see it
-    val errors = scala.collection.mutable.Map[String, String]()
-    var storageHighWater = 0L
-    def noteStorage(): Unit = {
-      val used = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
-      if (used > storageHighWater) storageHighWater = used
-    }
-    for (rep <- 0 to nReps; name <- names) {
-      val t0 = System.nanoTime()
-      var ok = true
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case e: Throwable =>
-        ok = false
-        errors(name) = e.getClass.getSimpleName +
-          Option(e.getMessage).map(m => ": " + m.linesIterator.next().take(120))
-            .getOrElse("")
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // a rep that threw is time-to-exception, not a timing — recording it
-      // would turn a broken query into a phantom speedup (the r7 failure
-      // mode: 18 dead queries "ran" in 0.05s and the total looked best-ever)
-      if (rep > 0 && ok) reps(name) = reps(name) :+ dt
-      noteStorage()
-    }
+    val Run(reps, errors, storageHighWater, records) = run(spark, sfDir, names, nReps)
     // errored queries carry no timing at all: absent from per-query times,
     // the total, cv, and the baseline comparison — present only in `errors`
-    val timedNames = names.filter(n => reps(n).nonEmpty && !errors.contains(n))
+    val timedNames = names.filter(n => reps.contains(n) && !errors.contains(n))
     val best = timedNames.map(n => n -> reps(n).min).toMap
     // per-query dispersion over the interleaved reps: cv = stddev/mean.
     // A query whose reps swing wildly on a shared box (bimodal cache /
@@ -114,6 +225,7 @@ object Bench {
       m.toSeq.sortBy(_._1).map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
     val qs = fmtMap(best.map { case (k, v) => k -> v.toString })
     val total = best.values.sum
+    val sf = Report.quote(sfDir)
     // storage-memory budget (VERDICT-r8 #8): the session memos (persisted
     // NSW adjacency, MV snapshots, cached cluster labels) must stay a
     // bounded CACHE, not a data-proportional resident set — the ceiling
@@ -131,10 +243,8 @@ object Bench {
     // a pause so lazy unpersists from the final queries don't inflate it.
     val storageBudget = sys.env.getOrElse(
       "SPARK_GRAFT_STORAGE_BUDGET_BYTES", (1L << 30).toString).toLong
-    def residentNow(): Long =
-      spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
     val residentEnd = {
-      val first = residentNow()
+      val first = resident(spark)
       if (first > storageBudget) {
         // Transient RDD-level persists (localCheckpoint artifacts whose
         // plans went out of scope with their query) are reaped by the
@@ -145,9 +255,9 @@ object Bench {
         // and any leaked .cache() (both CacheManager-pinned, GC-immune)
         // stay visible; collectable working-set garbage does not.
         System.gc(); Thread.sleep(3000)
-        val second = residentNow()
+        val second = resident(spark)
         if (second > storageBudget) {
-          System.gc(); Thread.sleep(5000); residentNow()
+          System.gc(); Thread.sleep(5000); resident(spark)
         } else second
       } else first
     }
@@ -158,12 +268,12 @@ object Bench {
     // rc=2: timings fine but the memo cache blew its ceiling.
     val rc = if (errors.nonEmpty) 1 else if (overBudget) 2 else 0
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","rc":$rc,"sf":"$sfDir",
+      s"""{"metric":"total","value":$total,"unit":"sec","rc":$rc,"sf":$sf,
          |"storage_mem_high_water_bytes":$storageHighWater,
          |"storage_resident_end_bytes":$residentEnd,
          |"storage_budget_bytes":$storageBudget,"storage_over_budget":$overBudget,
          |"queries":$qs,
-         |"reps":${fmtMap(reps.toMap.map { case (k, v) => k -> v.mkString("[", ",", "]") })},
+         |"reps":${fmtMap(reps.map { case (k, v) => k -> v.mkString("[", ",", "]") })},
          |"cv":${fmtMap(cv.map { case (k, v) => k -> f"$v%.3f" })},
          |"high_variance":${highVariance.sorted.map(n => s"\"$n\"").mkString("[", ",", "]")},
          |"baseline_ratio":${fmtMap(best.flatMap { case (n, t) =>
@@ -171,8 +281,8 @@ object Bench {
                 n -> f"${t / b}%.3f" } })},
          |"baseline_outliers_over_2x":${fmtMap(outliers.map { case (k, v) => k -> f"$v%.2f" })},
          |"baseline_outliers_over_2x_stable":${fmtMap(stableOutliers.map { case (k, v) => k -> f"$v%.2f" })},
-         |"errors":${fmtMap(errors.toMap.map { case (k, v) =>
-              k -> ("\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\"") })}}"""
+         |"errors":${fmtMap(errors.map { case (k, v) => k -> Report.quote(v) })},
+         |"records":${fmtMap(records.map { case (k, r) => k -> recordJson(r) })}}"""
         .stripMargin.replace("\n", "")
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       full.getBytes("UTF-8"))
@@ -191,14 +301,14 @@ object Bench {
 
     // the driver contract: exactly one JSON line, same keys as ever (rc
     // added: 0 = every catalog query ran; 1 = invalid run, see `errors`)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","rc":$rc,"queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","rc":$rc,"queries":$qs,"sf":$sf}""")
     // ADDITION (r14, VERDICT-r13 item 2): with 234 queries the contract
     // line is ~15 KB and the driver retains only a 2000-char stdout tail,
     // so it has parsed nothing since r05. Print a SECOND, SHORT summary
     // line LAST — small enough that any tail capture holds it whole. The
     // full per-query record lives in the $outPath artifact (per-config
     // name, committed); the contract line above is unchanged.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","rc":$rc,"n_queries":${timedNames.size},"cpus":$cpus,"full_artifact":"$outPath","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","rc":$rc,"n_queries":${timedNames.size},"cpus":$cpus,"full_artifact":${Report.quote(outPath)},"sf":$sf}""")
     spark.stop()
     if (rc != 0) sys.exit(rc)
   }

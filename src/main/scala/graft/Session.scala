@@ -2,9 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place graft builds a SparkSession. Every main (Bench, Verify,
-  * ScaleUp, SkewDemo, Explain, ProfileOne) and the specs' shared session
-  * take their settings from here, so a number a dev main prints comes
-  * from the same session conf the bench and the correctness dump use.
+  * ScaleUp, SkewDemo, Explain) and the specs' shared session take their
+  * settings from here, so a number a dev run prints comes from the same
+  * session conf the bench and the correctness dump use.
   */
 object Session {
   /** Core count for the mains: `SPARK_GRAFT_CPUS`, else every core the

@@ -30,7 +30,7 @@ object SkewDemo {
     require(runs.map(_.rows).distinct.size == 1)
 
     def runJson(r: SkewLab.SkewRun): String =
-      s"""{"strategy":"${r.strategy}","rows":${r.rows},"partitions":${r.partitions},""" +
+      s"""{"strategy":${Report.quote(r.strategy)},"rows":${r.rows},"partitions":${r.partitions},""" +
         s""""max_partition_share":${f"${r.maxShare}%.4f"},""" +
         s""""top_partitions_rows":[${r.top.mkString(",")}],""" +
         s""""plan_skew_split":${r.planSkewSplit},"wall_sec":${f"${r.wallSec}%.3f"}}"""
@@ -39,7 +39,7 @@ object SkewDemo {
       s"""{"heavy_keys":[${diag.map(r => s"""{"key":${r.getLong(1)},"cnt":${r.getLong(2)},"share":${r.getDouble(3)}}""").mkString(",")}],""" +
         s""""n_keys":${d0.getLong(4)},"max_cnt":${d0.getLong(5)},"p50_cnt":${d0.getLong(6)},"skew_factor":${d0.getDouble(7)}}"""
     val json =
-      s"""{"sf_dir":"$sfDir","advisory_bytes":"$advisory","salt":$salt,
+      s"""{"sf_dir":${Report.quote(sfDir)},"advisory_bytes":${Report.quote(advisory)},"salt":$salt,
          |"diagnosis":$diagJson,
          |"runs":[${runs.map(runJson).mkString(",\n")}]}""".stripMargin
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),

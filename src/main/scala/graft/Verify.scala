@@ -28,9 +28,7 @@ object Verify {
         if (!oracleIds(name)) RowsOnlyChecks.checks.get(name) match {
           case Some(c) =>
             val fails = try c.run(spark, sfDir, df)
-              catch { case e: Throwable =>
-                Seq(s"check threw ${e.getClass.getSimpleName}: " +
-                  Option(e.getMessage).map(_.linesIterator.next().take(200)).getOrElse("")) }
+              catch { case e: Throwable => Seq("check threw " + Report.error(e)) }
             roChecks(name) = (c.spec, c.invariant, fails)
           case None =>
             roChecks(name) = ("", "NO CHECK REGISTERED",
@@ -38,24 +36,11 @@ object Verify {
         }
       }
       catch { case e: Throwable =>
-        errors(name) = e.getClass.getSimpleName +
-          Option(e.getMessage).map(m => ": " + m.linesIterator.next().take(200))
-            .getOrElse("")
+        errors(name) = Report.error(e)
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Report.{quote => q}
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

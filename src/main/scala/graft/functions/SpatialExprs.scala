@@ -1,22 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** Space-filling-curve expressions for clustered data layout. */
 object SpatialExprs {
-
-  /** Hilbert-curve index of a 2-D cell (both coordinates in
-    * [0, 2^bits)) → long. Unlike the Morton interleave, consecutive
-    * Hilbert indices are always edge-adjacent cells, so there is no
-    * seam where a small box predicate straddles distant curve
-    * positions — the property the centered-box layout spec measures.
-    */
-  def hilbertIndex(x: Column, y: Column, bits: Int): Column =
-    GraftBridge.column(
-      HilbertIndex(GraftBridge.expression(x), GraftBridge.expression(y), bits))
 
   /** Hilbert-curve index over ANY number of dimensions (each coordinate
     * in [0, 2^bits), `bits·dims ≤ 63`) → long — see [[HilbertIndexN]].
@@ -26,79 +16,16 @@ object SpatialExprs {
       HilbertIndexN(dims.map(GraftBridge.expression), bits))
 }
 
-/** d = hilbert(x, y) via the standard per-bit rotate-and-accumulate walk
-  * (one fused loop per row in both interpreted and generated form — the
-  * naive Column-fold formulation would replicate the rotation state
-  * sub-tree ~4× per bit under CollapseProject and explode the plan).
-  */
-case class HilbertIndex(left: Expression, right: Expression, bits: Int)
-    extends BinaryExpression
-    with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  require(bits >= 1 && bits <= 31, s"hilbert bits out of range: $bits")
-
-  override def dataType: DataType = LongType
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    HilbertIndex.xy2d(l.asInstanceOf[Long], r.asInstanceOf[Long], bits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val d = ctx.freshName("d"); val s = ctx.freshName("s")
-      val rx = ctx.freshName("rx"); val ry = ctx.freshName("ry")
-      val t = ctx.freshName("t")
-      s"""
-         |long $x = $a; long $y = $b; long $d = 0L;
-         |for (long $s = 1L << ${bits - 1}; $s > 0; $s >>= 1) {
-         |  long $rx = (($x & $s) > 0) ? 1L : 0L;
-         |  long $ry = (($y & $s) > 0) ? 1L : 0L;
-         |  $d += $s * $s * ((3L * $rx) ^ $ry);
-         |  if ($ry == 0L) {
-         |    if ($rx == 1L) { $x = $s - 1L - $x; $y = $s - 1L - $y; }
-         |    long $t = $x; $x = $y; $y = $t;
-         |  }
-         |}
-         |${ev.value} = $d;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HilbertIndex =
-    copy(left = newLeft, right = newRight)
-}
-
-object HilbertIndex {
-  /** Interpreted twin of the generated loop. */
-  def xy2d(xi: Long, yi: Long, bits: Int): Long = {
-    var x = xi; var y = yi; var d = 0L
-    var s = 1L << (bits - 1)
-    while (s > 0) {
-      val rx = if ((x & s) > 0) 1L else 0L
-      val ry = if ((y & s) > 0) 1L else 0L
-      d += s * s * ((3L * rx) ^ ry)
-      if (ry == 0L) {
-        if (rx == 1L) { x = s - 1L - x; y = s - 1L - y }
-        val t = x; x = y; y = t
-      }
-      s >>= 1
-    }
-    d
-  }
-}
-
 /** N-dimensional Hilbert index via Skilling's transpose algorithm
   * ("Programming the Hilbert curve", AIP Conf. Proc. 707, 2004): the
   * axes fold into the curve's "transposed" bit-matrix in place —
   * per-level undo of the sub-cube rotations, then a Gray encode — and
   * the index is the MSB-first interleave of the transposed coordinates.
   * O(dims·bits) per row, no allocation beyond one dims-length scratch
-  * array. Like the 2-D walk, consecutive indices are edge-adjacent
-  * cells in every dimension count (bijectivity + unit-step are
-  * spec-exhausted at 3-D), which is what closes the "3-D+ layouts fall
-  * back to the weaker Morton curve" gap for [[graft.sources.ZOrder]].
-  * (The 2-D [[HilbertIndex]] keeps its own orientation for layout
-  * stability; the two curves are reflections, equally seam-free.)
+  * array. Unlike the Morton interleave, consecutive indices are
+  * edge-adjacent cells in every dimension count (bijectivity +
+  * unit-step are spec-exhausted at 2-D and 3-D), so there is no seam
+  * where a small box predicate straddles distant curve positions.
   */
 case class HilbertIndexN(children: Seq[Expression], bits: Int)
     extends Expression

@@ -1222,11 +1222,10 @@ object Relational {
     zAuditStaged((s, d)) {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("ts_us"), col("value"))
-      ev.repartitionByRange(16, col("event_id"))
-        .sortWithinPartitions("event_id")
+      graft.sources.ZOrder.byRange(ev, "event_id", 16, graft.Regime.rows(s, d, "events"))
         .write.mode("overwrite").parquet(natPath)
-      graft.sources.ZOrder.writeZOrdered(ev, mPath, "user_id", "ts_us", 16)
-      graft.sources.ZOrder.writeZOrdered(ev, hPath, "user_id", "ts_us", 16,
+      graft.sources.ZOrder.writeZOrderedN(ev, mPath, Seq("user_id", "ts_us"), 16)
+      graft.sources.ZOrder.writeZOrderedN(ev, hPath, Seq("user_id", "ts_us"), 16,
         curve = "hilbert")
       true
     }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -11,7 +12,7 @@ import org.apache.spark.sql.functions._
   * locality, so a selective predicate on EITHER column — or a box on
   * both — touches a small fraction of the files. This is the lakehouse
   * OPTIMIZE/ZORDER layout rewrite, expressed as plain Spark: one stats
-  * job, a codegen'd bit-interleave projection, a range repartition on
+  * job, a codegen'd curve projection, a sampled range repartition on
   * the z-value, and a sorted parquet write. At 100 TB the payoff is at
   * the FILE LISTING and row-group level: footer stats bound each file's
   * (dim1, dim2) box, and the reader prunes without touching data. The
@@ -19,18 +20,6 @@ import org.apache.spark.sql.functions._
   * predicate vs a hash layout of the same file count.
   */
 object ZOrder {
-
-  /** Interleave the low `bits` bits of two non-negative longs into a
-    * z-value: bit i of `a` lands at position 2i, bit i of `b` at 2i+1.
-    * A fold of shift/mask Column ops — whole-stage-codegen-friendly, no
-    * UDF.
-    */
-  def zValue2(a: Column, b: Column, bits: Int): Column =
-    (0 until bits).foldLeft(lit(0L)) { (acc, i) =>
-      acc
-        .bitwiseOR(shiftleft(shiftright(a, i).bitwiseAND(lit(1L)), 2 * i))
-        .bitwiseOR(shiftleft(shiftright(b, i).bitwiseAND(lit(1L)), 2 * i + 1))
-    }
 
   /** N-dimensional Morton interleave: bit i of dimension j lands at
     * position i·n + j. `bits · dims` must fit a long's 63 value bits.
@@ -45,18 +34,22 @@ object ZOrder {
     }
   }
 
-  /** [[writeZOrdered]] over ANY number of dimensions. Same contract:
-    * one stats job, one range exchange, sorted files with tight N-D
-    * bounding boxes. `curve`: "morton" (the bit-interleave) or
-    * "hilbert" (the N-D Skilling walk,
-    * [[graft.functions.HilbertIndexN]] — seam-free in every dimension
-    * count, preferred when hot predicates sit mid-range).
+  /** Write `df` to `path` as `files` parquet files clustered on `cols`
+    * (any number of dimensions): one O(1)-row stats job, one bounded
+    * sample job for the range bounds, then a single range exchange on
+    * the curve value (the only shuffle) with an in-partition sort, so
+    * every file's footer carries a tight N-D bounding box. `curve`: "morton" (the bit-interleave — cheapest,
+    * but a box straddling the space's center seam touches many curve
+    * segments) or "hilbert" (the Skilling walk,
+    * [[graft.functions.HilbertIndexN]] — adjacent indices are always
+    * adjacent cells, no seam in any dimension count; preferred when hot
+    * predicates sit mid-range).
     */
   def writeZOrderedN(df: DataFrame, path: String, cols: Seq[String],
       files: Int, bits: Int = 16, curve: String = "morton"): Unit =
     statsFor(df, cols) match {
       case None => df.limit(0).write.mode("overwrite").parquet(path)
-      case Some(ranges) =>
+      case Some((rows, ranges)) =>
         val scaled = cols.zip(ranges).map { case (c, (lo, hi)) =>
           scaleTo(col(c), lo, hi, bits)
         }
@@ -65,26 +58,46 @@ object ZOrder {
           case "hilbert" => graft.functions.SpatialExprs.hilbertIndexN(scaled, bits)
           case other     => throw new IllegalArgumentException(s"unknown curve: $other")
         }
-        df.withColumn("_z", z)
-          .repartitionByRange(files, col("_z"))
-          .sortWithinPartitions("_z")
+        byRange(df.withColumn("_z", z), "_z", files, rows)
           .drop("_z")
           .write.mode("overwrite").parquet(path)
     }
 
-  /** One stats job for the clustering columns, guarding the degenerate
-    * inputs the curve can't scale: an EMPTY input returns None (caller
-    * short-circuits to an empty write — a valid table, zero files of
-    * data), and an entirely-null clustering column fails loudly BY NAME
-    * instead of NPE-ing inside `getDouble` on the null min.
+  /** `df` (`rows` rows) in `files` partitions of consecutive, sorted
+    * ranges of the long column `key`, the bounds cut from a fixed-seed
+    * sample (`repartitionByRange` seeds its sampler with the RDD id, so
+    * its layout changes with how many RDDs the session made before).
+    */
+  def byRange(df: DataFrame, key: String, files: Int, rows: Long): DataFrame = {
+    val points = 100 * files
+    val sample = df.select(key).na.drop()
+      .sample(withReplacement = false, math.min(1.0, points.toDouble / rows), 42L)
+      .orderBy(key).take(10 * points).map(_.getLong(0))
+    val bounds = (1 until files).flatMap(i => sample.lift(i * sample.length / files)).toArray
+    val k = df.schema.fieldIndex(key)
+    val parts = df.rdd
+      .keyBy { r =>
+        val i = if (r.isNullAt(k)) -1 else java.util.Arrays.binarySearch(bounds, r.getLong(k))
+        if (i >= 0) i + 1 else -i - 1
+      }
+      .partitionBy(new HashPartitioner(files)) // key i in [0, files) → partition i
+      .values
+    df.sparkSession.createDataFrame(parts, df.schema).sortWithinPartitions(key)
+  }
+
+  /** One stats job for (row count, clustering columns' (min, max)),
+    * guarding the degenerate inputs the curve can't scale: an EMPTY input
+    * returns None (caller short-circuits to an empty write — a valid
+    * table, zero files of data), and an entirely-null clustering column
+    * fails loudly BY NAME instead of NPE-ing inside `getDouble`.
     */
   private def statsFor(df: DataFrame, cols: Seq[String])
-      : Option[Seq[(Double, Double)]] = {
+      : Option[(Long, Seq[(Double, Double)])] = {
     val aggs = count(lit(1)) +: cols.flatMap(c =>
       Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
     val st = df.agg(aggs.head, aggs.tail: _*).take(1).head
     if (st.getLong(0) == 0L) None
-    else Some(cols.zipWithIndex.map { case (c, j) =>
+    else Some(st.getLong(0) -> cols.zipWithIndex.map { case (c, j) =>
       if (st.isNullAt(1 + 2 * j) || st.isNullAt(2 + 2 * j))
         throw new IllegalArgumentException(
           s"z-order clustering column '$c' is entirely null")
@@ -102,36 +115,4 @@ object ZOrder {
       floor((c.cast("double") - lit(lo)) / lit(span) * lit(cells + 1)),
       lit(0L)), lit(cells))
   }
-
-  /** Write `df` to `path` as `files` parquet files clustered on
-    * (`c1`, `c2`): one O(1)-row stats job, then a single range exchange
-    * on the curve value (the only shuffle) with an in-partition sort so
-    * every file's footer carries a tight (c1, c2) bounding box.
-    * `curve`: "morton" (the bit-interleave above — cheapest, but a box
-    * straddling the space's center seam touches many curve segments) or
-    * "hilbert" (the codegen'd [[graft.functions.HilbertIndex]] walk —
-    * adjacent indices are always adjacent cells, no seam; preferred
-    * when hot predicates sit mid-range).
-    */
-  def writeZOrdered(df: DataFrame, path: String, c1: String, c2: String,
-      files: Int, bits: Int = 16, curve: String = "morton"): Unit =
-    statsFor(df, Seq(c1, c2)) match {
-      case None => df.limit(0).write.mode("overwrite").parquet(path)
-      case Some(Seq((lo1, hi1), (lo2, hi2))) =>
-        val (sx, sy) = (
-          scaleTo(col(c1), lo1, hi1, bits),
-          scaleTo(col(c2), lo2, hi2, bits))
-        val z = curve match {
-          case "morton"  => zValue2(sx, sy, bits)
-          case "hilbert" => graft.functions.SpatialExprs.hilbertIndex(sx, sy, bits)
-          case other     => throw new IllegalArgumentException(s"unknown curve: $other")
-        }
-        df.withColumn("_z", z)
-          .repartitionByRange(files, col("_z"))
-          .sortWithinPartitions("_z")
-          .drop("_z")
-          .write.mode("overwrite").parquet(path)
-      case Some(other) =>
-        throw new IllegalStateException(s"expected 2 stat pairs, got $other")
-    }
 }

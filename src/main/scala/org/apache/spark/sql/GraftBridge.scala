@@ -17,6 +17,13 @@ object GraftBridge {
   def divideByZeroError(): ArithmeticException =
     org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
 
+  /** Block until the listener bus has delivered every queued event
+    * (`SparkContext.listenerBus` is package-private), so a listener's
+    * counts cover every job and stage that has already ended.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
+
   /** Register a SQL function on a live session (the imperative counterpart
     * of `SparkSessionExtensions.injectFunction`, for sessions built
     * without `spark.sql.extensions`).

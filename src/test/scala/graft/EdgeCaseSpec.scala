@@ -195,11 +195,11 @@ class EdgeCaseSpec extends SparkSpec {
     // constant second dimension: scale span guards against /0, every row
     // quantizes to cell 0 on that axis, the write still round-trips
     val const = Seq((1L, 7L), (2L, 7L), (3L, 7L)).toDF("a", "b")
-    graft.sources.ZOrder.writeZOrdered(const, s"$base/c", "a", "b", 2)
+    graft.sources.ZOrder.writeZOrderedN(const, s"$base/c", Seq("a", "b"), 2)
     assert(spark.read.parquet(s"$base/c").count() == 3)
     // one file requested: range partitioning to a single partition
     val one = Seq((5L, 5L)).toDF("a", "b")
-    graft.sources.ZOrder.writeZOrdered(one, s"$base/o", "a", "b", 1, curve = "hilbert")
+    graft.sources.ZOrder.writeZOrderedN(one, s"$base/o", Seq("a", "b"), 1, curve = "hilbert")
     assert(spark.read.parquet(s"$base/o").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((5L, 5L)))
   }
 
@@ -223,7 +223,7 @@ class EdgeCaseSpec extends SparkSpec {
     val df = Seq((Some(0L), Some(0L)), (Some(31L), Some(31L)), (None, Some(1L)))
       .toDF("x", "y")
     val out = df.select(
-      graft.functions.SpatialExprs.hilbertIndex(col("x"), col("y"), 5).as("d"))
+      graft.functions.SpatialExprs.hilbertIndexN(Seq(col("x"), col("y")), 5).as("d"))
       .collect()
     assert(out(0).getLong(0) == 0L)              // origin is curve start
     assert(!out(1).isNullAt(0) && out(1).getLong(0) < 1024L)

@@ -1,9 +1,8 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,11 +23,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    ListenerDrain.drain(sc)
+    GraftBridge.drainListeners(sc)
     sc.addSparkListener(l)
     try {
       body
-      ListenerDrain.drain(sc)
+      GraftBridge.drainListeners(sc)
       jobs.get
     } finally sc.removeSparkListener(l)
   }
