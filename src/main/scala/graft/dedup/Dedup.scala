@@ -544,10 +544,18 @@ object Dedup {
   /** [[seedCellAssignmentsUncached]] memoized and CACHED per (session,
     * corpus): q44 self-joins the assignments (both sides would re-score
     * every seed cosine per row) and q35's neighbor graph reuses them.
+    * The build materializes the cache in a job of its own: every
+    * consumer reads it from both sides of a self-join, in two stages AQE
+    * runs at once, and a lazy cache left one stage's task blocked on the
+    * other's write of the same block.
     */
   private[graft] def seedCellAssignments(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    cellsMemo((s, d))(seedCellAssignmentsUncached(s, d).cache())
+    cellsMemo((s, d)) {
+      val cells = seedCellAssignmentsUncached(s, d).cache()
+      cells.count()
+      cells
+    }
 
   /** The blocking quantizer's codebook, GATED on corpus size (the
     * 100-TB lever shared with [[graft.ml.Centroids]]): at or below

@@ -1,7 +1,10 @@
 package graft.graph
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.QueryDef
 
 /** Graph analytics over engine-derived edge lists (the similarity /
@@ -498,44 +501,95 @@ object Graph {
     * sequence is monotone non-increasing and its fixpoint IS the k-core
     * decomposition (Lü et al., "The H-index of a network node", 2016) —
     * the distributed replacement for the inherently sequential
-    * min-degree peel. Each round is one join of the O(n·k) symmetric
-    * edge list against the O(n) estimate table + a per-node window over
-    * ≤ deg rows (degree-bounded, never corpus-wide); convergence probes
-    * the changed-node count every 2nd round (pageRankConverged's
-    * cadence); lineage truncates per round. `edges` is the symmetric
-    * `(src, dst)` list ([[symmetric]] or [[symKnnEdgesCached]]). Returns
-    * (states, rounds).
+    * min-degree peel. `edges` is the symmetric `(src, dst)` list
+    * ([[symmetric]] or [[symKnnEdgesCached]]). Returns (states, rounds).
+    *
+    * The adjacency is built once per call: node → neighbour array,
+    * hash-partitioned on the node over the session's shuffle partitions
+    * and cached, one id-sorted [[AdjBlock]] per partition. The estimates
+    * live beside it, one array per partition aligned with the block's
+    * ids. A round is ONE job: every node sends its estimate to its
+    * neighbours through one shuffle partitioned like the adjacency, and
+    * each partition zips the received estimates with its block and its
+    * previous estimates (neither moves), computes the new h-indexes and
+    * counts the nodes that changed; summing those counts is the action
+    * that materializes the round, so convergence is checked every round
+    * at no extra cost. The adjacency and every earlier round's estimates
+    * are unpersisted before returning; the last round's stay cached
+    * under the returned frame.
     */
   def coreness(edges: DataFrame, maxIter: Int = 40): (DataFrame, Int) = {
-    import org.apache.spark.sql.expressions.Window
-    var state = edges.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).cast("long").as("c"))
-      .localCheckpoint(false)
-    val byEst = Window.partitionBy("src").orderBy(desc("cnbr"))
+    val spark = edges.sparkSession
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val adj = edges.select(col("src"), col("dst")).queryExecution.toRdd
+      .map(r => (r.getLong(0), r.getLong(1)))
+      .groupByKey(part)
+      .mapPartitions { it =>
+        // id-sorted, so a recomputed block lines up with the estimates
+        // computed from the cached one
+        val (ids, nbrs) = it.map { case (v, ns) => (v, ns.toArray) }.toArray.sortBy(_._1).unzip
+        Iterator(AdjBlock(ids, nbrs))
+      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    var state: RDD[Cores] =
+      adj.map(b => Cores(b.ids, b.nbrs.map(_.length.toLong), b.ids.length.toLong))
     var rounds = 0
     var converged = false
     while (rounds < maxIter && !converged) {
-      val next = edges
-        .join(state.select(col("id").as("dst"), col("c").as("cnbr")), "dst")
-        .withColumn("r", row_number().over(byEst).cast("long"))
-        .groupBy(col("src").as("id"))
-        .agg(max(least(col("r"), col("cnbr"))).as("c"))
-        .localCheckpoint(false)
+      val prev = state
+      val sent = adj.zipPartitions(prev) { (a, s) =>
+        val (b, c) = (a.next(), s.next().c)
+        b.ids.indices.iterator.flatMap(i => b.nbrs(i).iterator.map(u => (u, c(i))))
+      }.partitionBy(part)
+      state = adj.zipPartitions(sent, prev) { (a, recv, s) =>
+        val (b, c0) = (a.next(), s.next().c)
+        val c = hIndexes(b, recv)
+        Iterator(Cores(b.ids, c, c.indices.count(i => c(i) != c0(i)).toLong))
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+      converged = state.map(_.changed).reduce(_ + _) == 0
+      prev.unpersist(false)
       rounds += 1
-      if (rounds % 2 == 0 || rounds == maxIter) {
-        converged = next.join(state.withColumnRenamed("c", "c0"), "id")
-          .filter(col("c") =!= col("c0")).isEmpty
-      }
-      state = next
     }
+    adj.unpersist(false)
     // The h-index sequence is only the k-core decomposition AT ITS
     // FIXPOINT — a maxIter exit mid-descent is a silently-wrong core
     // assignment (the rows-only histogram check cannot see it), so fail
-    // loudly instead. The probe runs on every even round and at maxIter,
-    // so an unconverged exit is always detected here.
+    // loudly instead. Every round counts its changes, so an unconverged
+    // exit is always detected here.
     require(converged,
       s"coreness failed to reach the h-index fixpoint in $maxIter rounds")
-    (state, rounds)
+    import spark.implicits._
+    (state.flatMap(e => e.ids.iterator.zip(e.c.iterator)).toDF("id", "c"), rounds)
+  }
+
+  /** One partition of [[coreness]]'s adjacency: its nodes in id order,
+    * each with its neighbour ids. */
+  private final case class AdjBlock(ids: Array[Long], nbrs: Array[Array[Long]])
+
+  /** One partition's coreness estimates, aligned with its [[AdjBlock]]'s
+    * ids, and how many changed in the round that computed them. */
+  private final case class Cores(ids: Array[Long], c: Array[Long], changed: Long)
+
+  /** The h-index of each node's received neighbour estimates. Estimates
+    * are counted per node by value, capped at the node's degree (on a
+    * symmetric list a node receives one estimate per neighbour, so its
+    * h-index never exceeds its degree); the h-index is then the largest
+    * h whose count of estimates ≥ h reaches h.
+    */
+  private def hIndexes(b: AdjBlock, recv: Iterator[(Long, Long)]): Array[Long] = {
+    val base = new Array[Int](b.ids.length + 1)
+    for (i <- b.ids.indices) base(i + 1) = base(i) + b.nbrs(i).length + 1
+    val cnt = new Array[Int](base(b.ids.length))
+    recv.foreach { case (v, c) =>
+      val i = java.util.Arrays.binarySearch(b.ids, v)
+      cnt(base(i) + math.min(c, b.nbrs(i).length.toLong).toInt) += 1
+    }
+    Array.tabulate(b.ids.length) { i =>
+      var h = b.nbrs(i).length
+      var atLeast = cnt(base(i) + h)
+      while (atLeast < h) { h -= 1; atLeast += cnt(base(i) + h) }
+      h.toLong
+    }
   }
 
   // q236 — k-core decomposition of the kNN similarity graph (the

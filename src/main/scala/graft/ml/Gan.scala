@@ -221,7 +221,7 @@ object Gan {
     * ends, so repeated calls do not pile up cached copies.
     */
   def train(data: DataFrame, cfg: Config = Config()): Model = {
-    val rdd = data.select("x").rdd.map(_.getSeq[Double](0).toArray).cache()
+    val rdd = data.select("x").queryExecution.toRdd.map(_.getArray(0).toDoubleArray()).cache()
     try trainRounds(rdd, cfg) finally rdd.unpersist()
   }
 
@@ -246,13 +246,13 @@ object Gan {
     * three parameter vectors are averaged in one [[averagingRound]].
     * Returns the GAN model plus the trained head (a linear-softmax layer
     * over the dis features, like the reference's dense+softmax head,
-    * :337-364). The (x, label) rows stay cached through the last round,
-    * head-polish rounds included, and are released on return.
+    * :337-364). The (x, label) rows stay cached through the co-training
+    * rounds and are released on return.
     */
   def trainCoTrained(data: DataFrame, nClasses: Int, cfg: Config = Config(),
       lrHead: Double = 0.05): (Model, Array[Double]) = {
-    val rdd = data.select("x", "label").rdd
-      .map(r => (r.getSeq[Double](0).toArray, r.getInt(1)))
+    val rdd = data.select("x", "label").queryExecution.toRdd
+      .map(r => (r.getArray(0).toDoubleArray(), r.getInt(1)))
       .cache()
     try coTrainRounds(rdd, nClasses, cfg, lrHead) finally rdd.unpersist()
   }
@@ -288,19 +288,23 @@ object Gan {
     // NO local-step cap: the cap guards nonconvex feature divergence,
     // while the frozen-feature head objective is convex — averaging
     // full-partition passes is safe and every row contributes. Only the
-    // head is averaged (averaging an unchanged vector is not bit-exact);
-    // the frozen `dP` rides in the task closure.
-    var hP = Seq(hCo)
-    for (_ <- 0 until 2)
-      hP = averagingRound(rdd, hP) { case (_, it, Seq(h)) =>
-        var batches = 0L
-        it.grouped(cfg.batchSize).foreach { batch =>
-          batch.foreach { case (x, label) => headStep(h, dis.features(dP, x), label, nClasses, lrHead) }
-          batches += 1
+    // head is averaged (averaging an unchanged vector is not bit-exact).
+    // The frozen features are computed once, inside the first polish
+    // round's job, and cached for the second.
+    val feats = rdd.map { case (x, label) => (dis.features(dP, x), label) }.cache()
+    try {
+      var hP = Seq(hCo)
+      for (_ <- 0 until 2)
+        hP = averagingRound(feats, hP) { case (_, it, Seq(h)) =>
+          var batches = 0L
+          it.grouped(cfg.batchSize).foreach { batch =>
+            batch.foreach { case (f, label) => headStep(h, f, label, nClasses, lrHead) }
+            batches += 1
+          }
+          batches
         }
-        batches
-      }
-    (Model(cfg, dP, gP), hP.head)
+      (Model(cfg, dP, gP), hP.head)
+    } finally feats.unpersist()
   }
 
   /** The softmax head's logits over feature vector `f`: the head is

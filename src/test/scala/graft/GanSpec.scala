@@ -99,10 +99,37 @@ class GanSpec extends SparkSpec {
     assert((digest(m.dParams, m.gParams), digest(cm.dParams, cm.gParams, head)) == want.get)
   }
 
-  test("averages are bit-stable on a 4-partition frame") {
+  // (sf fixture, arch) -> (train digest, co-train digest) on the
+  // 4-partition frame below, default Config: the single-partition
+  // goldens cannot see a change that only moves multi-partition results
+  private val golden4 = Map(
+    ("sf0.001", "mlp") -> ("91b6c85d3219e7eb", "71d0828c8182b12b"),
+    ("sf0.001", "conv") -> ("9a72511946627a15", "e9f056563cde3c51"),
+    ("sf0.01", "mlp") -> ("2e9a9067e0638c92", "3995322526fd959a"),
+    ("sf0.01", "conv") -> ("973f3019f1b98db8", "f5ed0aa1256a83db"),
+    ("sf0.1", "mlp") -> ("0ebffb29346fc196", "e4dd260d0aa361e0"),
+    ("sf0.1", "conv") -> ("b9d193ee7e441454", "ecd70471e81f4459"))
+
+  private def fourParts[A](body: (DataFrame, DataFrame) => A): A = {
     val x = scaled.repartition(4).cache()
     val lx = labeled(x).cache()
-    try {
+    try body(x, lx) finally { lx.unpersist(); x.unpersist() }
+  }
+
+  for (arch <- Seq("mlp", "conv")) test(s"$arch train and co-train match the 4-partition golden digests") {
+    val want = golden4.get((new java.io.File(sfDir).getName, arch))
+    assume(want.isDefined, s"no 4-partition golden digests for $sfDir")
+    fourParts { (x, lx) =>
+      assert(x.rdd.getNumPartitions == 4, "4-partition goldens")
+      val cfg = Gan.Config(arch = arch)
+      val m = Gan.train(x, cfg)
+      val (cm, head) = Gan.trainCoTrained(lx, nClasses = 10, cfg)
+      assert((digest(m.dParams, m.gParams), digest(cm.dParams, cm.gParams, head)) == want.get)
+    }
+  }
+
+  test("averages are bit-stable on a 4-partition frame") {
+    fourParts { (x, lx) =>
       assert(x.rdd.mapPartitions(it => Iterator(it.size)).collect().count(_ > 0) == 4)
       for (arch <- Seq("mlp", "conv")) {
         val cfg = Gan.Config(arch = arch)
@@ -113,7 +140,7 @@ class GanSpec extends SparkSpec {
         assert(digest(ca.dParams, ca.gParams, ha) == digest(cb.dParams, cb.gParams, hb),
           s"$arch co-train")
       }
-    } finally { lx.unpersist(); x.unpersist() }
+    }
   }
 
   test("one job per averaging round, after the input-cache job") {

@@ -264,14 +264,15 @@ class GraphSpec extends SparkSpec {
     assert(math.abs(rows.head.getAs[Double]("adamic_adar") - bestScore) < 1e-6)
   }
 
-  test("q236 coreness equals exact min-degree peeling; the max core satisfies the k-core invariant") {
-    val e = sim.Similarity.approxKnnGraphCached(spark, sfDir, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val und = (e ++ e.map(p => (p._2, p._1))).distinct
-    val adj = und.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
+  /** Symmetric adjacency of an undirected edge list. */
+  private def adjacency(e: Seq[(Long, Long)]): Map[Long, Set[Long]] =
+    (e ++ e.map(p => (p._2, p._1))).distinct
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
 
-    // exact coreness by sequential min-degree peeling (the textbook
-    // algorithm the h-index fixpoint must reproduce)
+  /** Exact coreness by sequential min-degree peeling (the textbook
+    * algorithm the h-index fixpoint must reproduce).
+    */
+  private def peel(adj: Map[Long, Set[Long]]): Map[Long, Long] = {
     val core = scala.collection.mutable.Map[Long, Long]()
     val deg = scala.collection.mutable.Map(adj.view.mapValues(_.size.toLong).toSeq: _*)
     val alive = scala.collection.mutable.Set(adj.keySet.toSeq: _*)
@@ -285,6 +286,14 @@ class GraphSpec extends SparkSpec {
         adj(v).foreach(u => if (alive(u)) deg(u) -= 1)
       }
     }
+    core.toMap
+  }
+
+  test("q236 coreness equals exact min-degree peeling; the max core satisfies the k-core invariant") {
+    val e = sim.Similarity.approxKnnGraphCached(spark, sfDir, 3).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val adj = adjacency(e.toSeq)
+    val core = peel(adj)
     val expectHist = core.values.groupBy(identity).view
       .mapValues(_.size.toLong).toMap
 
@@ -311,5 +320,27 @@ class GraphSpec extends SparkSpec {
       val d = adj(v).count(inMax)
       assert(d >= kmax, s"node $v has only $d neighbors in the $kmax-core")
     }
+  }
+
+  test("coreness matches the peel on a graph of four core levels, one job per round") {
+    def clique(ns: Seq[Long]) = for (a <- ns; b <- ns if a < b) yield (a, b)
+    def cycle(ns: Seq[Long]) = ns.zip(ns.tail :+ ns.head)
+    // a K5 (core 4), a K4 (core 3) hanging off a 6-cycle (core 2), a
+    // pendant chain off the K5 and a lone edge (core 1)
+    val e = clique(1L to 5L) ++ clique(30L to 33L) ++ cycle(10L to 15L) ++
+      Seq((30L, 10L), (15L, 5L), (1L, 20L), (20L, 21L), (21L, 22L), (40L, 41L))
+    val core = peel(adjacency(e))
+    assert(core.values.toSet == Set(1L, 2L, 3L, 4L), s"fixture levels: $core")
+
+    import spark.implicits._
+    val edges = graph.Graph.symmetric(e.toDF("id_a", "id_b")).localCheckpoint()
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    var res: (org.apache.spark.sql.DataFrame, Int) = null
+    val jobs = jobsOf { res = graph.Graph.coreness(edges) }
+    val (state, rounds) = res
+    assert(rounds > 1 && jobs == rounds, s"$jobs jobs for $rounds rounds")
+    assert(spark.sparkContext.getPersistentRDDs.size <= cachedBefore + 1,
+      "coreness left an intermediate cache behind")
+    assert(state.collect().map(r => (r.getLong(0), r.getLong(1))).toMap == core)
   }
 }

@@ -77,4 +77,14 @@ class MemoSpec extends SparkSpec {
     q35(spark, sfDir).count()
     assert(cachedRelations <= once)
   }
+
+  test("the seed-cell assignments leave their memo build materialized") {
+    Memos.clearAll()
+    val cells = dedup.Dedup.seedCellAssignments(spark, sfDir)
+    val cached = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+      .lookupCachedData(cells.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+    assert(cached.exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded),
+      "the consumers' self-join stages would both find the block missing")
+  }
 }
