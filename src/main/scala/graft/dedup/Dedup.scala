@@ -1,7 +1,7 @@
 package graft.dedup
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import graft.{QueryDef, Regime, Tables}
 import graft.functions.VectorExprs
@@ -105,49 +105,28 @@ object Dedup {
     * chunks are ordered by the sorted slices), so a pair's multiplicity
     * in this stream = the number of buckets it collides in — the
     * AND-amplification counter [[candidateIdPairs]]' minBands gate
-    * aggregates instead of distinct-ing.
+    * aggregates instead of distinct-ing. The `carry` columns of a bucket
+    * ride onto every pair it emits: the prefix gates carry the weight
+    * `mult` (after collapsing duplicate bucket arrays WITH their
+    * multiplicity, groupBy(ids).count), and summing it per pair recovers
+    * the exact number of tokens whose buckets contain the pair — the
+    * shared-prefix-token counter the [[PrefixGateExt]] gate filters on.
     */
   private def pairsFromIdBucketsRaw(buckets: org.apache.spark.sql.DataFrame,
-      nParts: Int): org.apache.spark.sql.DataFrame =
+      nParts: Int, carry: Column*): org.apache.spark.sql.DataFrame =
     buckets
       .withColumn("nc",
         ceil(size(col("ids")).cast("double") / PairChunk).cast("int"))
       .withColumn("ci", explode(sequence(lit(0), col("nc") - 1)))
       .withColumn("cj", explode(sequence(col("ci"), col("nc") - 1)))
       .repartition(nParts)
-      .select(
+      .select(Seq(
         explode(slice(col("ids"), col("ci") * PairChunk + 1, lit(PairChunk)))
           .as("id_a"),
-        col("ids"), col("cj"))
-      .select(col("id_a"),
+        col("ids"), col("cj")) ++ carry: _*)
+      .select(Seq(col("id_a"),
         explode(slice(col("ids"), col("cj") * PairChunk + 1, lit(PairChunk)))
-          .as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-
-  /** [[pairsFromIdBucketsRaw]] with a per-bucket weight column `mult`
-    * carried onto every emitted pair: after collapsing duplicate bucket
-    * arrays WITH their multiplicity (groupBy(ids).count), summing `mult`
-    * per pair recovers the exact number of tokens whose buckets contain
-    * the pair — the shared-prefix-token counter the [[PrefixGateExt]]
-    * gate filters on.
-    */
-  private def pairsFromIdBucketsRawMult(
-      buckets: org.apache.spark.sql.DataFrame,
-      nParts: Int): org.apache.spark.sql.DataFrame =
-    buckets
-      .withColumn("nc",
-        ceil(size(col("ids")).cast("double") / PairChunk).cast("int"))
-      .withColumn("ci", explode(sequence(lit(0), col("nc") - 1)))
-      .withColumn("cj", explode(sequence(col("ci"), col("nc") - 1)))
-      .repartition(nParts)
-      .select(
-        explode(slice(col("ids"), col("ci") * PairChunk + 1, lit(PairChunk)))
-          .as("id_a"),
-        col("ids"), col("cj"), col("mult"))
-      .select(col("id_a"),
-        explode(slice(col("ids"), col("cj") * PairChunk + 1, lit(PairChunk)))
-          .as("id_b"),
-        col("mult"))
+          .as("id_b")) ++ carry: _*)
       .filter(col("id_a") < col("id_b"))
 
   /** Extension width `s` for the exact prefix AND-amplification gate.
@@ -755,62 +734,21 @@ object Dedup {
       .limit(50)
   }
 
-  /** Connected components by iterative min-label propagation over an edge
-    * list — the cluster step that turns near-dup PAIRS into dedup GROUPS
-    * (keep one doc per component). Each iteration is one join + aggregate
-    * (AQE-planned); iterations are bounded by component diameter, which is
-    * tiny for near-dup clusters. No driver-side graph state.
-    */
-  def connectedComponents(pairs: org.apache.spark.sql.DataFrame,
-      maxIters: Int = 20): org.apache.spark.sql.DataFrame = {
-    // undirected edges both ways
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .cache()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .cache()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "src").withColumnRenamed("label", "src_label"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min("src_label").as("nbr_label"))
-      var next = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"), least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-      // Truncate lineage periodically: without this the plan grows one
-      // join+agg per iteration and deep clusters hit planner/stack limits
-      // long before the data does.
-      next = if ((iter + 1) % 5 == 0) next.localCheckpoint() else next.cache()
-      // The convergence probe is a full job (join + limit-1 count), so
-      // run it every 2nd iteration only — propagation past the fixpoint
-      // is a no-op, and near-dup components have tiny diameters, so at
-      // most one redundant iteration runs.
-      if (iter % 2 == 1 || iter == maxIters - 1) {
-        val changed = next.join(labels.withColumnRenamed("label", "old_label"), "id")
-          .filter(col("label") =!= col("old_label")).limit(1).count()
-        converged = changed == 0
-      }
-      labels.unpersist()
-      labels = next
-      iter += 1
-    }
-    labels
-  }
-
-  /** Near-dup cluster labels shared by q45 (cluster audit) and q46 (clean
-    * corpus): ONE banded-signature pipeline + candidate join + label
-    * propagation per (session, corpus), memoized — the two consumers used
-    * to recompute the whole MinHash pipeline each.
+  /** Near-dup cluster labels shared by q45 (cluster audit), q46 (clean
+    * corpus) and q125 (survivorship): ONE banded-signature pipeline +
+    * candidate join + [[graft.graph.Graph.connectedComponents]] per
+    * (session, corpus), memoized — the consumers used to recompute the
+    * whole MinHash pipeline each. The labels are cached as a relation:
+    * once the first consumer has filled it, the planner knows its size
+    * (an RDD-backed frame has none, and q46's joins would wait for AQE
+    * to measure them, two jobs more per run).
     */
   private val labelsMemo = new graft.Memo[(SparkSession, String), DataFrame](
     "dedup.clusterLabels", _.unpersist())
   private def clusterLabels(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     labelsMemo((s, d)) {
-      connectedComponents(q42.fn(s, d).select("id_a", "id_b"))
+      graft.graph.Graph.connectedComponents(q42.fn(s, d).select("id_a", "id_b"))._1.cache()
     }
 
   // q45 — near-dup clusters: MinHash candidate pairs → connected
@@ -2257,7 +2195,7 @@ object Dedup {
           .agg(sort_array(collect_set(col("gid"))).as("ids"))
           .filter(size(col("ids")) > 1)
           .groupBy("ids").agg(count(lit(1)).as("mult"))
-        val counts = pairsFromIdBucketsRawMult(buckets, nParts)
+        val counts = pairsFromIdBucketsRaw(buckets, nParts, col("mult"))
           .groupBy("id_a", "id_b").agg(sum(col("mult")).as("nsh"))
         val gs = gg.select(col("gid"), col("amin"), col("m"))
         counts
@@ -2503,11 +2441,11 @@ object Dedup {
         .select(least(col("bid"), col("cid")).as("id_a"),
           greatest(col("bid"), col("cid")).as("id_b"))
       // batch-vs-batch, same gate over the batch-local buckets
-      val selfGated = pairsFromIdBucketsRawMult(
+      val selfGated = pairsFromIdBucketsRaw(
         bb.filter(size(col("bids")) > 1)
           .select(col("bids").as("ids"))
           .groupBy("ids").agg(count(lit(1)).as("mult")),
-        nParts)
+        nParts, col("mult"))
         .groupBy("id_a", "id_b").agg(sum(col("mult")).as("nsh"))
         .join(broadcast(bGate.select(col("doc_id").as("id_a"),
           col("amin").as("amin_b"), col("m").as("m_b"))), "id_a")

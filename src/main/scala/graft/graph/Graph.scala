@@ -2,50 +2,110 @@ package graft.graph
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 import graft.QueryDef
 
 /** Graph analytics over engine-derived edge lists (the similarity /
-  * dedup graphs the other operator families produce). Iterative jobs
-  * follow the same discipline as [[graft.dedup.Dedup.connectedComponents]]:
-  * edge state is computed once, cached pre-partitioned on the join key,
-  * lineage is truncated periodically, and every intermediate cache is
-  * dropped once the final state is materialized.
+  * dedup graphs the other operator families produce). PageRank is a
+  * DataFrame loop over directed edges; connected components, BFS, label
+  * propagation and coreness are vertex programs on one [[superstep]]
+  * over a cached RDD adjacency, one Spark job per round.
   */
 object Graph {
 
-  /** Memoized SYMMETRIC kNN adjacency per (session, dir, k): both
-    * orientations of the cached q57 graph, deduplicated, cached
-    * hash-partitioned on `dst` (r14). Three loop operators (q135 label
-    * propagation, q187 BFS, q236 coreness) each re-derived this exact
-    * table per invocation — a union + corpus-edge distinct shuffle every
-    * run at any scale — and then joined it per round on `dst`, paying an
-    * edge-side exchange every round because the derived table carried no
-    * useful partitioning. The memo builds it once per session (charged
-    * to the bench warm-up pass like every session memo), and the `dst`
-    * hash partitioning lets each round's state join reuse the edge
-    * side's layout — only the O(n) state table moves per round, the
-    * pageRankCore discipline.
-    */
-  private val symEdgesMemo = new graft.Memo[(SparkSession, String, Int), DataFrame](
-    "graph.symKnnEdges", _.unpersist(false))
-  def symKnnEdgesCached(s: SparkSession, d: String, k: Int): DataFrame =
-    symEdgesMemo((s, d, k)) {
-      symmetric(graft.sim.Similarity.approxKnnGraphCached(s, d, k))
-        .repartition(col("dst")).cache()
-    }
+  /** One partition of the [[superstep]]'s adjacency: its nodes in id
+    * order, each with its deduplicated neighbour ids. */
+  private final case class AdjBlock(ids: Array[Long], nbrs: Array[Array[Long]])
 
-  /** The symmetric `(src, dst)` adjacency of an undirected (`id_a`,
-    * `id_b`) edge list: both orientations, deduplicated. The loop
-    * operators take it as their edge list and join it every round, so
-    * callers without the [[symKnnEdgesCached]] memo materialize it.
+  /** One partition's node states, aligned with its [[AdjBlock]]'s ids,
+    * and how many changed in the round that computed them. */
+  private final case class States[S](ids: Array[Long], s: Array[S], changed: Long)
+
+  /** The one iterative loop of the vertex programs.
+    *
+    * The adjacency is built once per call from the undirected (`id_a`,
+    * `id_b`) pairs of `edges` (both orientations, neighbours
+    * deduplicated) plus every node of `nodes` (one there and in no pair
+    * has no neighbours): node → neighbour array, hash-partitioned on the
+    * node over the session's shuffle partitions and cached, one id-sorted
+    * [[AdjBlock]] per partition. A node's state starts as `init(id, its
+    * attribute in nodes, degree)` and lives in one array per partition
+    * aligned with the block's ids.
+    *
+    * A round is ONE job: every node whose `send(round, state)` is defined
+    * sends it to each neighbour through one shuffle partitioned like the
+    * adjacency, each partition zips what it received with its block and
+    * its previous states (neither moves), sets every node to
+    * `update(round, state, received)` and counts the nodes that changed;
+    * summing those counts is the action that materializes the round, so
+    * convergence costs no probe job and no graph state comes to the
+    * driver. The loop stops after a round that changes no node, or after
+    * `maxRounds`. The adjacency and every earlier round's states are
+    * unpersisted before returning; the last round's stay cached under the
+    * returned `(id, state)` RDD until the context cleaner reclaims it.
+    * Returns (states, rounds, converged).
     */
-  def symmetric(edges: DataFrame): DataFrame = {
-    val fwd = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-    fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+  private def superstep[A: ClassTag, S: ClassTag, M: ClassTag](
+      edges: DataFrame, nodes: RDD[(Long, A)], maxRounds: Int)(
+      init: (Long, Option[A], Int) => S,
+      send: (Int, S) => Option[M],
+      update: (Int, S, Seq[M]) => S): (RDD[(Long, S)], Int, Boolean) = {
+    val part = new HashPartitioner(edges.sparkSession.sessionState.conf.numShufflePartitions)
+    val ends: RDD[(Long, Either[Long, A])] =
+      edges.select(col("id_a").cast("long"), col("id_b").cast("long"))
+        .queryExecution.toRdd
+        .flatMap { r =>
+          val (a, b) = (r.getLong(0), r.getLong(1))
+          Iterator((a, Left(b)), (b, Left(a)))
+        }
+    val adj = ends.union(nodes.mapValues(a => Right(a): Either[Long, A]))
+      .groupByKey(part)
+      .mapPartitions { it =>
+        // id-sorted, so a recomputed block lines up with the states
+        // computed from the cached one
+        val rows = it.toArray.sortBy(_._1)
+        val b = AdjBlock(rows.map(_._1),
+          rows.map(_._2.collect { case Left(u) => u }.toArray.distinct))
+        val s0 = Array.tabulate(rows.length) { i =>
+          init(b.ids(i), rows(i)._2.collectFirst { case Right(a) => a }, b.nbrs(i).length)
+        }
+        Iterator((b, s0))
+      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    var state: RDD[States[S]] = adj.map { case (b, s0) => States(b.ids, s0, 0L) }
+    var rounds = 0
+    var converged = false
+    while (rounds < maxRounds && !converged) {
+      val (prev, r) = (state, rounds + 1)
+      val sent = adj.zipPartitions(prev) { (a, p) =>
+        val (b, s) = (a.next()._1, p.next().s)
+        b.ids.indices.iterator.flatMap(i =>
+          send(r, s(i)).iterator.flatMap(m => b.nbrs(i).iterator.map(u => (u, m))))
+      }.partitionBy(part)
+      state = adj.zipPartitions(sent, prev) { (a, recv, p) =>
+        val (b, s) = (a.next()._1, p.next().s)
+        val inbox = Array.fill(b.ids.length)(List.empty[M])
+        recv.foreach { case (v, m) =>
+          val i = java.util.Arrays.binarySearch(b.ids, v)
+          inbox(i) = m :: inbox(i)
+        }
+        val next = Array.tabulate(b.ids.length)(i => update(r, s(i), inbox(i)))
+        Iterator(States(b.ids, next, b.ids.indices.count(i => next(i) != s(i)).toLong))
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+      converged = state.map(_.changed).reduce(_ + _) == 0
+      prev.unpersist(false)
+      rounds = r
+    }
+    adj.unpersist(false)
+    (state.flatMap(p => p.ids.iterator.zip(p.s.iterator)), rounds, converged)
   }
+
+  /** No node attributes: the nodes are the edges' endpoints. */
+  private def endpointsOnly(edges: DataFrame): RDD[(Long, Unit)] =
+    edges.sparkSession.sparkContext.emptyRDD
 
   /** Distributed PageRank over a directed edge list (`src`, `dst`
     * columns). Rank convention sums to N (teleport term `1 − d` per
@@ -65,13 +125,13 @@ object Graph {
     pageRankCore(edges0, nIter, damping, handleDangling, tol = 0.0)._1
 
   /** PageRank run to CONVERGENCE: max per-node |rank delta| is probed
-    * every 2nd round (the connectedComponents cadence — the probe is a
-    * full job, and one extra round past the fixpoint is cheaper than
-    * probing every round) and iteration stops once it falls to
-    * `tol × N`, or at `maxIter`. Returns (ranks, rounds executed) so
-    * callers and specs can see how far the fixpoint actually ran —
-    * a fixed round count wastes wall time on converged graphs at any
-    * scale, and silently under-converges on slow-mixing ones.
+    * every 2nd round (the probe is a full job, and one extra round past
+    * the fixpoint is cheaper than probing every round) and iteration
+    * stops once it falls to `tol × N`, or at `maxIter`. Returns (ranks,
+    * rounds executed) so callers and specs can see how far the fixpoint
+    * actually ran — a fixed round count wastes wall time on converged
+    * graphs at any scale, and silently under-converges on slow-mixing
+    * ones.
     */
   def pageRankConverged(edges0: DataFrame, maxIter: Int = 40,
       damping: Double = 0.85, tol: Double = 1e-6,
@@ -203,53 +263,66 @@ object Graph {
       .limit(20)
   }
 
-  /** Synchronous semi-supervised LABEL PROPAGATION over a symmetric
-    * `(src, dst)` edge list ([[symmetric]] or [[symKnnEdgesCached]]):
-    * every non-seed node takes, each round, the majority label
-    * among its currently-labeled neighbors (ties → count desc then
-    * smallest label; seeds stay clamped). Each round is one join of the
-    * O(n·k) edge list against the label table + one counted groupBy + one
-    * per-node window — all keyed shuffles over bounded O(n·k) rows, no
-    * driver-side reads; rounds are driver-paced with a lazy
-    * localCheckpoint truncating each round's lineage (q78's pageRank
-    * discipline). The data-curation use: stretch a small labeled seed
-    * set over an unlabeled corpus via embedding-neighborhood structure.
-    *
-    * `seeds` must carry (vec_id, label, is_seed) with label null on
-    * non-seeds. Returns the final (vec_id, label, is_seed, n_support)
-    * state; n_support is the winning vote count from the round the label
-    * was last assigned.
+  /** Connected components of an undirected (`id_a`, `id_b`) pair list
+    * by min-label propagation on the [[superstep]]: every node starts as
+    * its own label and each round takes the smallest of its label and
+    * its neighbours', until a round changes none. There is no round cap:
+    * the fixpoint labels each node with the smallest id of its component
+    * (rounds = the longest distance from a node to its component's
+    * minimum, plus the round that changes nothing). The cluster step
+    * that turns near-dup PAIRS into dedup GROUPS (keep one doc per
+    * component). Returns ((id, label) for every endpoint, rounds).
     */
-  def labelPropagation(edges: DataFrame, seeds: DataFrame, nIter: Int): DataFrame = {
-    // The per-vote argmax is an order-free min(struct(-n, label))
-    // aggregate instead of a row_number window: identical winner (max
-    // count, smallest label on ties), but it aggregates partially
-    // map-side and needs no per-round sort (r13).
-    var state = seeds
-      .select(col("vec_id"), col("label"), col("is_seed"),
-        lit(null).cast("long").as("n_support"))
-      .localCheckpoint(false)
-    for (_ <- 1 to nIter) {
-      val votes = edges
-        .join(state.filter(col("label").isNotNull)
-          .select(col("vec_id").as("dst"), col("label").as("nbr_label")), "dst")
-        .groupBy(col("src"), col("nbr_label"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy(col("src").as("vec_id"))
-        .agg(min(struct((-col("n")).as("nn"), col("nbr_label").as("nbr_label"))).as("m"))
-        .select(col("vec_id"), col("m.nbr_label").as("nbr_label"),
-          (-col("m.nn")).as("n"))
-      state = state.join(votes, Seq("vec_id"), "left")
-        .select(
-          col("vec_id"),
-          when(col("is_seed"), col("label"))
-            .otherwise(coalesce(col("nbr_label"), col("label"))).as("label"),
-          col("is_seed"),
-          when(col("is_seed"), lit(null).cast("long"))
-            .otherwise(coalesce(col("n"), col("n_support"))).as("n_support"))
-        .localCheckpoint(false)
-    }
-    state
+  def connectedComponents(pairs: DataFrame): (DataFrame, Int) = {
+    val (labels, rounds, _) =
+      superstep[Unit, Long, Long](pairs, endpointsOnly(pairs), Int.MaxValue)(
+        (id, _, _) => id, (_, l) => Some(l), (_, l, recv) => recv.foldLeft(l)(math.min))
+    (pairs.sparkSession.createDataFrame(labels).toDF("id", "label"), rounds)
+  }
+
+  /** A [[labelPropagation]] node's state: its label (None = unlabelled),
+    * the winning vote count of the round that last assigned it, and
+    * whether it is a clamped seed. */
+  private final case class Vote(label: Option[Long], support: Option[Long], seed: Boolean)
+
+  /** Synchronous semi-supervised LABEL PROPAGATION on the [[superstep]]
+    * over an undirected (`id_a`, `id_b`) edge list: every non-seed node
+    * takes, each round, the majority label among its labelled neighbours
+    * (ties → count desc then smallest label; seeds stay clamped; a node
+    * with no labelled neighbour keeps its state), for `nIter` rounds or
+    * until a round changes nothing. The data-curation use: stretch a
+    * small labelled seed set over an unlabelled corpus via
+    * embedding-neighbourhood structure.
+    *
+    * `seeds` must carry (vec_id, label, is_seed) with an integral label,
+    * null on non-seeds (a null is_seed counts as false). Nodes of `edges`
+    * absent from `seeds` never vote. Returns the final (vec_id, label,
+    * is_seed, n_support) of every `seeds` row, and the rounds run;
+    * n_support is the winning vote count from the round the label was
+    * last assigned.
+    */
+  def labelPropagation(edges: DataFrame, seeds: DataFrame, nIter: Int): (DataFrame, Int) = {
+    val rows = seeds
+      .select(col("vec_id").cast("long"), col("label").cast("long"),
+        coalesce(col("is_seed"), lit(false)))
+      .queryExecution.toRdd
+      .map(r => (r.getLong(0),
+        Vote(if (r.isNullAt(1)) None else Some(r.getLong(1)), None, r.getBoolean(2))))
+    val (votes, rounds, _) = superstep[Vote, Option[Vote], Long](edges, rows, nIter)(
+      (_, v, _) => v,
+      (_, v) => v.flatMap(_.label),
+      (_, v, recv) => v.map { x =>
+        if (x.seed || recv.isEmpty) x
+        else {
+          val (l, n) = recv.groupBy(identity).map { case (l, ls) => (l, ls.size.toLong) }
+            .minBy { case (l, n) => (-n, l) }
+          Vote(Some(l), Some(n), seed = false)
+        }
+      })
+    (edges.sparkSession
+      .createDataFrame(votes.flatMap { case (id, v) => v.map(x => (id, x.label, x.seed, x.support)) })
+      .toDF("vec_id", "label", "is_seed", "n_support")
+      .withColumn("label", col("label").cast(seeds.schema("label").dataType)), rounds)
   }
 
   // q135 — label propagation as a catalog operator: 20% of vectors
@@ -268,46 +341,28 @@ object Graph {
       .select(col("vec_id"),
         when(col("vec_id") % 5 === 0, col("label")).as("label"),
         (col("vec_id") % 5 === 0).as("is_seed"))
-    labelPropagation(symKnnEdgesCached(s, d, 3), seeds, nIter = 4)
+    labelPropagation(graft.sim.Similarity.approxKnnGraphCached(s, d, 3), seeds, nIter = 4)._1
       .filter(!col("is_seed") && col("label").isNotNull)
       .select(col("vec_id"), col("label").as("pred_label"), col("n_support"))
       .orderBy("vec_id")
   }
 
-  /** Level-synchronous multi-source BFS over a symmetric `(src, dst)`
-    * edge list ([[symmetric]] or [[symKnnEdgesCached]]): every seed
-    * starts at depth 0, each round the current frontier's unvisited
-    * neighbors get depth+1. Returns the final (id, depth) table for all
-    * REACHED nodes. Each round is one
-    * keyed join of the frontier against the edge list + a distinct +
-    * an anti-join against the visited set — all keyed shuffles over
-    * O(frontier·k) rows, no driver-side reads beyond the one-count
-    * early-exit probe; rounds are driver-paced with lazy localCheckpoint
-    * truncating lineage (q78's pageRank discipline). The frontier is the
-    * WHOLE level, so rounds = graph diameter, not node count — the
-    * level-synchronous shape that scales.
+  /** Level-synchronous multi-source BFS on the [[superstep]] over an
+    * undirected (`id_a`, `id_b`) edge list: every seed (an `id` of
+    * `seeds`) starts at depth 0, and each round the nodes the last round
+    * reached (its frontier) give their unreached neighbours depth+1. It
+    * stops after `maxDepth` rounds or a round that reaches no new node:
+    * one round per layer plus the one that finds none.
+    * Returns ((id, depth) for every REACHED node, rounds).
     */
-  def bfsLayers(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
-    var visited = seeds.select(col("id"), lit(0L).as("depth"))
-      .localCheckpoint(false)
-    var frontier = visited
-    var d = 0
-    while (d < maxDepth && frontier.limit(1).count() > 0) {
-      d += 1
-      // the frontier expands through the DST side of the symmetric edge
-      // set ({src : dst ∈ frontier} ≡ {dst : src ∈ frontier} — both
-      // orientations are present), so the join reuses the memo's `dst`
-      // hash partitioning and only the frontier moves
-      frontier = frontier
-        .join(edges, col("id") === col("dst"))
-        .select(col("src").as("id")).distinct()
-        .join(visited.select(col("id").as("vid")), col("id") === col("vid"),
-          "left_anti")
-        .select(col("id"), lit(d.toLong).as("depth"))
-        .localCheckpoint(false)
-      visited = visited.union(frontier).localCheckpoint(false)
-    }
-    visited
+  def bfsLayers(edges: DataFrame, seeds: DataFrame, maxDepth: Int): (DataFrame, Int) = {
+    val seedIds = seeds.select(col("id").cast("long")).queryExecution.toRdd
+      .map(r => (r.getLong(0), ()))
+    val (depths, rounds, _) = superstep[Unit, Long, Long](edges, seedIds, maxDepth)(
+      (_, seed, _) => if (seed.isDefined) 0L else -1L,
+      (r, d) => if (d == r - 1) Some(d) else None,
+      (_, d, recv) => if (d < 0 && recv.nonEmpty) recv.head + 1 else d)
+    (edges.sparkSession.createDataFrame(depths.filter(_._2 >= 0)).toDF("id", "depth"), rounds)
   }
 
   // q187 — BFS REACHABILITY LAYERS over the kNN graph (the hop-distance
@@ -323,7 +378,8 @@ object Graph {
     val seeds = graft.Tables.embeddings(s, d)
       .filter(col("vec_id") % 250 === 0)
       .select(col("vec_id").as("id"))
-    val reached = bfsLayers(symKnnEdgesCached(s, d, 3), seeds, maxDepth = 20)
+    val reached = bfsLayers(graft.sim.Similarity.approxKnnGraphCached(s, d, 3), seeds,
+      maxDepth = 20)._1
     val all = graft.Tables.embeddings(s, d).select(col("vec_id").as("id"))
     val withDepth = all
       .join(reached.select(col("id").as("rid"), col("depth")),
@@ -495,101 +551,41 @@ object Graph {
       .limit(20)
   }
 
-  /** CORENESS (k-core number) of every node via the h-index fixpoint:
+  /** CORENESS (k-core number) of every node via the h-index fixpoint on
+    * the [[superstep]] over an undirected (`id_a`, `id_b`) edge list:
     * init c_v = deg(v); each round c_v ← H({c_u : u ~ v}) where H is the
-    * h-index (the largest h with ≥ h neighbors at estimate ≥ h). The
+    * h-index (the largest h with ≥ h neighbours at estimate ≥ h). The
     * sequence is monotone non-increasing and its fixpoint IS the k-core
     * decomposition (Lü et al., "The H-index of a network node", 2016) —
     * the distributed replacement for the inherently sequential
-    * min-degree peel. `edges` is the symmetric `(src, dst)` list
-    * ([[symmetric]] or [[symKnnEdgesCached]]). Returns (states, rounds).
-    *
-    * The adjacency is built once per call: node → neighbour array,
-    * hash-partitioned on the node over the session's shuffle partitions
-    * and cached, one id-sorted [[AdjBlock]] per partition. The estimates
-    * live beside it, one array per partition aligned with the block's
-    * ids. A round is ONE job: every node sends its estimate to its
-    * neighbours through one shuffle partitioned like the adjacency, and
-    * each partition zips the received estimates with its block and its
-    * previous estimates (neither moves), computes the new h-indexes and
-    * counts the nodes that changed; summing those counts is the action
-    * that materializes the round, so convergence is checked every round
-    * at no extra cost. The adjacency and every earlier round's estimates
-    * are unpersisted before returning; the last round's stay cached
-    * under the returned frame.
+    * min-degree peel. Returns ((id, c), rounds).
     */
   def coreness(edges: DataFrame, maxIter: Int = 40): (DataFrame, Int) = {
-    val spark = edges.sparkSession
-    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
-    val adj = edges.select(col("src"), col("dst")).queryExecution.toRdd
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .groupByKey(part)
-      .mapPartitions { it =>
-        // id-sorted, so a recomputed block lines up with the estimates
-        // computed from the cached one
-        val (ids, nbrs) = it.map { case (v, ns) => (v, ns.toArray) }.toArray.sortBy(_._1).unzip
-        Iterator(AdjBlock(ids, nbrs))
-      }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var state: RDD[Cores] =
-      adj.map(b => Cores(b.ids, b.nbrs.map(_.length.toLong), b.ids.length.toLong))
-    var rounds = 0
-    var converged = false
-    while (rounds < maxIter && !converged) {
-      val prev = state
-      val sent = adj.zipPartitions(prev) { (a, s) =>
-        val (b, c) = (a.next(), s.next().c)
-        b.ids.indices.iterator.flatMap(i => b.nbrs(i).iterator.map(u => (u, c(i))))
-      }.partitionBy(part)
-      state = adj.zipPartitions(sent, prev) { (a, recv, s) =>
-        val (b, c0) = (a.next(), s.next().c)
-        val c = hIndexes(b, recv)
-        Iterator(Cores(b.ids, c, c.indices.count(i => c(i) != c0(i)).toLong))
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      converged = state.map(_.changed).reduce(_ + _) == 0
-      prev.unpersist(false)
-      rounds += 1
-    }
-    adj.unpersist(false)
+    val (cores, rounds, converged) =
+      superstep[Unit, Long, Long](edges, endpointsOnly(edges), maxIter)(
+        (_, _, deg) => deg.toLong, (_, c) => Some(c), (_, _, recv) => hIndex(recv))
     // The h-index sequence is only the k-core decomposition AT ITS
     // FIXPOINT — a maxIter exit mid-descent is a silently-wrong core
     // assignment (the rows-only histogram check cannot see it), so fail
-    // loudly instead. Every round counts its changes, so an unconverged
-    // exit is always detected here.
+    // loudly instead.
     require(converged,
       s"coreness failed to reach the h-index fixpoint in $maxIter rounds")
-    import spark.implicits._
-    (state.flatMap(e => e.ids.iterator.zip(e.c.iterator)).toDF("id", "c"), rounds)
+    (edges.sparkSession.createDataFrame(cores).toDF("id", "c"), rounds)
   }
 
-  /** One partition of [[coreness]]'s adjacency: its nodes in id order,
-    * each with its neighbour ids. */
-  private final case class AdjBlock(ids: Array[Long], nbrs: Array[Array[Long]])
-
-  /** One partition's coreness estimates, aligned with its [[AdjBlock]]'s
-    * ids, and how many changed in the round that computed them. */
-  private final case class Cores(ids: Array[Long], c: Array[Long], changed: Long)
-
-  /** The h-index of each node's received neighbour estimates. Estimates
-    * are counted per node by value, capped at the node's degree (on a
-    * symmetric list a node receives one estimate per neighbour, so its
-    * h-index never exceeds its degree); the h-index is then the largest
-    * h whose count of estimates ≥ h reaches h.
+  /** The h-index of a node's received neighbour estimates. A node
+    * receives one estimate per neighbour, so its h-index never exceeds
+    * their number n; estimates are counted by value, capped at n, and the
+    * h-index is the largest h whose count of estimates ≥ h reaches h.
     */
-  private def hIndexes(b: AdjBlock, recv: Iterator[(Long, Long)]): Array[Long] = {
-    val base = new Array[Int](b.ids.length + 1)
-    for (i <- b.ids.indices) base(i + 1) = base(i) + b.nbrs(i).length + 1
-    val cnt = new Array[Int](base(b.ids.length))
-    recv.foreach { case (v, c) =>
-      val i = java.util.Arrays.binarySearch(b.ids, v)
-      cnt(base(i) + math.min(c, b.nbrs(i).length.toLong).toInt) += 1
-    }
-    Array.tabulate(b.ids.length) { i =>
-      var h = b.nbrs(i).length
-      var atLeast = cnt(base(i) + h)
-      while (atLeast < h) { h -= 1; atLeast += cnt(base(i) + h) }
-      h.toLong
-    }
+  private def hIndex(est: Seq[Long]): Long = {
+    val n = est.length
+    val cnt = new Array[Int](n + 1)
+    est.foreach(c => cnt(math.min(c, n.toLong).toInt) += 1)
+    var h = n
+    var atLeast = cnt(h)
+    while (atLeast < h) { h -= 1; atLeast += cnt(h) }
+    h
   }
 
   // q236 — k-core decomposition of the kNN similarity graph (the
@@ -605,7 +601,7 @@ object Graph {
   // matches every node's core number, plus the k-core INVARIANT (every
   // node in the induced max-core subgraph keeps ≥ k_max neighbors).
   val q236: QueryDef = QueryDef.rowsOnly("q236_kcore") { (s, d) =>
-    coreness(symKnnEdgesCached(s, d, 3))._1
+    coreness(graft.sim.Similarity.approxKnnGraphCached(s, d, 3))._1
       .groupBy("c").agg(count(lit(1)).as("n_nodes"))
       .select(col("c").as("coreness"), col("n_nodes"))
       .orderBy(desc("coreness"))

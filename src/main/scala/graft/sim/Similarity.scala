@@ -1057,8 +1057,9 @@ object Similarity {
   }
 
   /** [[approxKnnGraph]] cached once per (session, dir, k) — the edge
-    * list is consumed by q57 (the graph itself) and q78 (centrality over
-    * it), and its window+join would otherwise recompute per consumer.
+    * list is consumed by q57 (the graph itself), q78 (centrality over
+    * it) and the q135/q187/q236 graph loops, and its window+join would
+    * otherwise recompute per consumer.
     */
   private val knnGraphMemo = new graft.Memo[(SparkSession, String, Int), DataFrame](
     "sim.knnGraph", _.unpersist())

@@ -21,17 +21,19 @@ class DedupClusterSpec extends SparkSpec {
 
   test("connectedComponents matches a union-find reference") {
     import spark.implicits._
-    val pairs = Seq(
-      (1L, 2L), (2L, 3L),          // component {1,2,3}
-      (10L, 11L),                  // component {10,11}
-      (20L, 21L), (21L, 22L), (22L, 20L), // cycle {20,21,22}
-      (30L, 31L), (32L, 33L), (31L, 32L)) // chain {30..33}
-      .toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = unionFind(Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L),
-      (21L, 22L), (22L, 20L), (30L, 31L), (32L, 33L), (31L, 32L)))
-    assert(got == want)
+    val inputs = Seq(
+      Seq(
+        (1L, 2L), (2L, 3L),          // component {1,2,3}
+        (10L, 11L),                  // component {10,11}
+        (20L, 21L), (21L, 22L), (22L, 20L), // cycle {20,21,22}
+        (30L, 31L), (32L, 33L), (31L, 32L)), // chain {30..33}
+      // a path 1–2–…–40: node 40 is 39 hops from its label
+      (1L to 39L).map(i => (i, i + 1)))
+    inputs.foreach { pairs =>
+      val got = graph.Graph.connectedComponents(pairs.toDF("id_a", "id_b"))._1.collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == unionFind(pairs))
+    }
   }
 
   test("q45 clusters cover the candidate-pair vertex set exactly once") {

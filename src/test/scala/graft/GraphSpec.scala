@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.when
+
 /** Distributed PageRank vs a dense driver-side reference — the whole
   * sf0.001 similarity graph, node for node.
   */
@@ -297,8 +300,8 @@ class GraphSpec extends SparkSpec {
     val expectHist = core.values.groupBy(identity).view
       .mapValues(_.size.toLong).toMap
 
-    val (state, rounds) = graph.Graph.coreness(graph.Graph.symmetric(
-      sim.Similarity.approxKnnGraphCached(spark, sfDir, 3)).localCheckpoint())
+    val (state, rounds) =
+      graph.Graph.coreness(sim.Similarity.approxKnnGraphCached(spark, sfDir, 3))
     val gotNodes = state.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(gotNodes.size == core.size)
     core.foreach { case (v, c) =>
@@ -322,25 +325,114 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("coreness matches the peel on a graph of four core levels, one job per round") {
+  /** A K5 (core 4), a K4 (core 3) hanging off a 6-cycle (core 2), a
+    * pendant chain off the K5 and a lone edge (core 1). */
+  private val fourLevels: Seq[(Long, Long)] = {
     def clique(ns: Seq[Long]) = for (a <- ns; b <- ns if a < b) yield (a, b)
     def cycle(ns: Seq[Long]) = ns.zip(ns.tail :+ ns.head)
-    // a K5 (core 4), a K4 (core 3) hanging off a 6-cycle (core 2), a
-    // pendant chain off the K5 and a lone edge (core 1)
-    val e = clique(1L to 5L) ++ clique(30L to 33L) ++ cycle(10L to 15L) ++
+    clique(1L to 5L) ++ clique(30L to 33L) ++ cycle(10L to 15L) ++
       Seq((30L, 10L), (15L, 5L), (1L, 20L), (20L, 21L), (21L, 22L), (40L, 41L))
-    val core = peel(adjacency(e))
-    assert(core.values.toSet == Set(1L, 2L, 3L, 4L), s"fixture levels: $core")
+  }
 
+  /** Runs `loop` on the four-level graph, pins one Spark job per round
+    * and at most one cached RDD more after the call, and returns its
+    * rows as (first column → the rest).
+    */
+  private def oneJobPerRound(loop: DataFrame => (DataFrame, Int)): Map[Long, Seq[Any]] = {
     import spark.implicits._
-    val edges = graph.Graph.symmetric(e.toDF("id_a", "id_b")).localCheckpoint()
+    val edges = fourLevels.toDF("id_a", "id_b").localCheckpoint()
     val cachedBefore = spark.sparkContext.getPersistentRDDs.size
-    var res: (org.apache.spark.sql.DataFrame, Int) = null
-    val jobs = jobsOf { res = graph.Graph.coreness(edges) }
-    val (state, rounds) = res
+    var res: (DataFrame, Int) = null
+    val jobs = jobsOf { res = loop(edges) }
+    val (out, rounds) = res
     assert(rounds > 1 && jobs == rounds, s"$jobs jobs for $rounds rounds")
     assert(spark.sparkContext.getPersistentRDDs.size <= cachedBefore + 1,
-      "coreness left an intermediate cache behind")
-    assert(state.collect().map(r => (r.getLong(0), r.getLong(1))).toMap == core)
+      "the loop left an intermediate cache behind")
+    out.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+  }
+
+  test("coreness matches the peel on a graph of four core levels, one job per round") {
+    val core = peel(adjacency(fourLevels))
+    assert(core.values.toSet == Set(1L, 2L, 3L, 4L), s"fixture levels: $core")
+    val got = oneJobPerRound(graph.Graph.coreness(_))
+    assert(got == core.map { case (v, c) => v -> Seq(c) })
+  }
+
+  test("connectedComponents labels each node with its component's minimum, one job per round") {
+    val got = oneJobPerRound(graph.Graph.connectedComponents)
+    assert(got == adjacency(fourLevels).keySet
+      .map(v => v -> Seq(if (v >= 40L) 40L else 1L)).toMap)
+  }
+
+  test("bfsLayers matches a dense BFS on the four-level graph, one job per round") {
+    import spark.implicits._
+    val adj = adjacency(fourLevels)
+    // 99 is in no edge: a seed all the same, at depth 0
+    val seeds = Set(22L, 40L, 99L)
+    var depth = seeds.map(_ -> 0L).toMap
+    var frontier = seeds
+    var d = 0L
+    while (frontier.nonEmpty) {
+      d += 1
+      frontier = frontier.flatMap(adj.getOrElse(_, Set.empty)).filterNot(depth.contains)
+      depth ++= frontier.map(_ -> d)
+    }
+    val got = oneJobPerRound(graph.Graph.bfsLayers(_, seeds.toSeq.toDF("id"), maxDepth = 20))
+    assert(got == depth.map { case (v, d) => v -> Seq(d) })
+  }
+
+  test("labelPropagation matches a dense vote replay on the four-level graph, one job per round") {
+    import spark.implicits._
+    val adj = adjacency(fourLevels)
+    val seedLabel = Map(1L -> 7, 4L -> 8, 33L -> 8, 41L -> 9)
+    var lab: Map[Long, (Option[Int], Option[Long])] =
+      adj.keySet.map(v => v -> (seedLabel.get(v), Option.empty[Long])).toMap
+    for (_ <- 1 to 3) {
+      val prev = lab
+      lab = prev.map { case (v, cur) =>
+        val votes = adj(v).toSeq.flatMap(prev(_)._1)
+        if (seedLabel.contains(v) || votes.isEmpty) v -> cur
+        else {
+          val (l, n) = votes.groupBy(identity).toSeq
+            .map { case (l, occ) => (l, occ.size.toLong) }.minBy { case (l, n) => (-n, l) }
+          v -> (Some(l), Some(n))
+        }
+      }
+    }
+    val seeds = adj.keySet.toSeq.map(v => (v, seedLabel.get(v), seedLabel.contains(v)))
+      .toDF("vec_id", "label", "is_seed")
+    val got = oneJobPerRound(graph.Graph.labelPropagation(_, seeds, nIter = 3))
+    assert(got == lab.map { case (v, (l, n)) =>
+      v -> Seq(l.getOrElse(null), seedLabel.contains(v), n.getOrElse(null)) })
+  }
+
+  test("the four loops give the same rows however the kNN edges are ordered, oriented or partitioned") {
+    import spark.implicits._
+    val loaded = sim.Similarity.approxKnnGraphCached(spark, sfDir, 3)
+    val e = loaded.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val variants = Seq(
+      "rows reversed" -> e.reverse.toDF("id_a", "id_b"),
+      "id_a/id_b swapped" -> e.map(_.swap).toDF("id_a", "id_b"),
+      "1 partition" -> loaded.repartition(1),
+      "7 partitions" -> loaded.repartition(7))
+    val emb = Tables.embeddings(spark, sfDir)
+    val bfsSeeds = emb.filter($"vec_id" % 250 === 0).select($"vec_id".as("id"))
+    val lpSeeds = emb.select($"vec_id", when($"vec_id" % 5 === 0, $"label").as("label"),
+      ($"vec_id" % 5 === 0).as("is_seed"))
+    val loops: Seq[(String, DataFrame => (DataFrame, Int))] = Seq(
+      "connectedComponents" -> (graph.Graph.connectedComponents(_)),
+      "bfsLayers" -> (graph.Graph.bfsLayers(_, bfsSeeds, maxDepth = 20)),
+      "labelPropagation" -> (graph.Graph.labelPropagation(_, lpSeeds, nIter = 4)),
+      "coreness" -> (graph.Graph.coreness(_)))
+    def run(loop: DataFrame => (DataFrame, Int), edges: DataFrame) = {
+      val (out, rounds) = loop(edges)
+      (out.orderBy(out.columns.head).collect().toSeq, rounds)
+    }
+    for ((name, loop) <- loops) {
+      val want = run(loop, loaded)
+      assert(want._1.nonEmpty, s"$name: no rows")
+      for ((how, edges) <- variants)
+        assert(run(loop, edges) == want, s"$name differs with the edges $how")
+    }
   }
 }
